@@ -5,18 +5,31 @@ Reference surface (``lib/exosql.ex``):
   - ``ExoSQL.explain(sql, context)`` → :func:`explain`
   - ``ExoSQL.format_result(result)`` → :func:`format_result`
   - ``ExoSQL.parse/2`` + re-execute with different ``__vars__``
-    → :meth:`Context.prepare` (reusable handle) or :meth:`Context.sql`
-    with ``vars`` (Spark caches the parsed/analyzed plan internally).
+    → :meth:`Context.prepare` (reusable handle: the dialect rewrite and
+    source resolution run once; ``spark.sql`` still parses and analyzes
+    on every run) or :meth:`Context.sql` with ``vars``.
 
 The reference *context* is a map ``%{"db" => {ExtractorModule, opts}}``
 (``lib/exosql/parser.ex :: real_parse/2`` resolves ``db.table`` against
 extractor ``schema/1,2`` callbacks — lazily, at parse time). Here a
 context maps database names to source specs; sources resolve **on first
 reference** (a query mentioning ``db.t``, or explicit ``table()`` /
-``table_names()`` introspection), and each resolved source registers its
-tables as temp views named ``db_table`` (exosql's ``db.table`` is
-rewritten to ``db_table`` by a literal-masked identifier rewrite so the
-same queries run on Spark SQL).
+``table_names()`` introspection).
+
+Resolution is reused per session: file-backed specs (``csv``, ``jsonl``,
+``orc``, ``parquet`` directories) resolve through a session-scoped memo
+(:func:`exosql_spark.io.memoized`), so a new ``Context`` or a one-shot
+:func:`query` over files the session has already seen runs no listing or
+schema-inference job; every lookup re-stats the files and rebuilds an
+entry whose files changed. ``env``, ``node``, ``http``, ``tables`` and
+callable specs resolve afresh for every new context.
+
+Each query binds temp views named ``db_table`` only for the tables it
+references (exosql's ``db.table`` is rewritten to ``db_table`` by a
+literal-masked identifier rewrite so the same queries run on Spark SQL).
+The names are shared by every context on the session, so a session-wide
+registry re-binds a view whenever it holds another context's frame and
+skips the bind when it already holds the right one.
 
 Variables: exosql resolves ``$name`` placeholders from the context key
 ``"__vars__"`` (``lib/exosql/expr.ex :: run_expr`` ``{:var, name}``).
@@ -46,6 +59,27 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from exosql_spark.sources import resolve_source
+
+
+# Which DataFrame each ``db_table`` temp view of a session holds, stored
+# as an attribute on the SparkSession object (the cache.py registry
+# pattern).  Contexts on one session share the view namespace, so a view
+# is re-bound whenever it holds another frame than the query needs, and
+# left alone (no ``createOrReplaceTempView`` round trip) when it holds
+# the same one.
+_VIEWS_ATTR = "_exosql_bound_views"
+
+
+def _bind_views(spark: SparkSession, views: dict[str, DataFrame]) -> None:
+    """Make each temp view ``name`` hold ``views[name]`` on ``spark``."""
+    bound = getattr(spark, _VIEWS_ATTR, None)
+    if bound is None:
+        bound = {}
+        setattr(spark, _VIEWS_ATTR, bound)
+    for name, df in views.items():
+        if bound.get(name) is not df:
+            df.createOrReplaceTempView(name)
+            bound[name] = df
 
 
 @dataclass
@@ -80,17 +114,17 @@ class Context:
             self.add_database(name, spec)
 
     def add_database(self, name: str, spec: Any) -> None:
-        """Register a database *spec*. Resolution (schema discovery, view
-        registration) is deferred to first reference — remote sources
-        with many tables cost nothing until a query touches them
-        (reference extractors resolve ``schema/1,2`` lazily too)."""
+        """Register a database *spec*. Resolution (schema discovery) is
+        deferred to first reference — remote sources with many tables
+        cost nothing until a query touches them (reference extractors
+        resolve ``schema/1,2`` lazily too) — and file-backed specs reuse
+        what the session already resolved for the same unchanged files.
+        Views are bound per query, only for the tables it references."""
         self._dbs[name] = _RegisteredDB(name, spec)
 
     def _resolve(self, db: _RegisteredDB) -> dict[str, DataFrame]:
         if db.tables is None:
             db.tables = resolve_source(self.spark, db.spec)
-            for tname, df in db.tables.items():
-                df.createOrReplaceTempView(f"{db.name}_{tname}")
         return db.tables
 
     def table_names(self) -> list[str]:
@@ -105,7 +139,7 @@ class Context:
 
     # -- query path ---------------------------------------------------
 
-    def _rewrite(self, sql: str) -> str:
+    def _rewrite(self, sql: str) -> tuple[str, dict[str, DataFrame]]:
         """Rewrite the exosql dialect to Spark SQL: ``db.table`` refs →
         ``db_table`` views, ``$var`` → ``:var`` named parameters
         (``$$`` → literal ``$``), plus the compat rewrites in
@@ -114,26 +148,30 @@ class Context:
         masked first so e.g. a query containing ``'visit db.events'``
         or ``'price in $USD'`` is never rewritten inside the quotes.
 
-        Only databases actually referenced by the query get resolved —
-        registration stays lazy for everything else."""
+        Only databases actually referenced by the query get resolved,
+        and only the tables it references are bound as views. Returns
+        the Spark SQL and its ``{view name: DataFrame}`` bindings."""
         from exosql_spark.dialect import mask_literals, unmask_literals
         from exosql_spark.dialect import rewrite as dialect_rewrite
 
         masked, lits = mask_literals(sql)
+        views: dict[str, DataFrame] = {}
         for db in self._dbs.values():
             if not re.search(rf"\b{re.escape(db.name)}\s*\.", masked):
                 continue
-            for t in self._resolve(db):
-                masked = re.sub(
-                    rf"\b{re.escape(db.name)}\s*\.\s*{re.escape(t)}\b",
-                    f"{db.name}_{t}",
-                    masked,
+            for t, df in self._resolve(db).items():
+                view = f"{db.name}_{t}"
+                masked, n = re.subn(
+                    rf"\b{re.escape(db.name)}\s*\.\s*{re.escape(t)}\b", view, masked
                 )
+                if n:
+                    views[view] = df
+        _bind_views(self.spark, views)
         # $$ → literal $; $var → :var (named parameter marker)
         masked = masked.replace("$$", "\x02")
         masked = re.sub(r"\$([A-Za-z_][A-Za-z_0-9]*)", r":\1", masked)
         masked = masked.replace("\x02", "$")
-        return dialect_rewrite(unmask_literals(masked, lits))
+        return dialect_rewrite(unmask_literals(masked, lits)), views
 
     def _run(self, rewritten: str, vars: dict[str, Any] | None, coerce: bool) -> DataFrame:
         if not coerce:
@@ -154,17 +192,18 @@ class Context:
         vars: dict[str, Any] | None = None,
         coerce: bool | None = None,
     ) -> DataFrame:
-        return self._run(
-            self._rewrite(sql), vars, self._coerce if coerce is None else coerce
-        )
+        rewritten, _ = self._rewrite(sql)
+        return self._run(rewritten, vars, self._coerce if coerce is None else coerce)
 
     def prepare(self, sql: str, coerce: bool | None = None) -> "Prepared":
         """``ExoSQL.parse/2`` parity: rewrite once, return a reusable
         handle that re-executes with different ``vars`` bindings. The
-        dialect rewrite runs exactly once; Spark's plan cache makes
-        repeated execution cheap."""
+        dialect rewrite and source resolution run exactly once; each
+        run still has ``spark.sql`` parse and analyze the rewritten
+        text (Spark keeps no plan cache for SQL text)."""
+        rewritten, views = self._rewrite(sql)
         return Prepared(
-            self, self._rewrite(sql), self._coerce if coerce is None else coerce
+            self, rewritten, self._coerce if coerce is None else coerce, views
         )
 
     def explain(self, sql: str, vars: dict[str, Any] | None = None) -> str:
@@ -178,14 +217,19 @@ class Context:
 
 @dataclass
 class Prepared:
-    """Reusable parsed-query handle (reference ``ExoSQL.parse/2`` →
-    repeated ``ExoSQL.execute/2`` with fresh ``__vars__``)."""
+    """Reusable rewritten-query handle (reference ``ExoSQL.parse/2`` →
+    repeated ``ExoSQL.execute/2`` with fresh ``__vars__``). Each run
+    re-binds the handle's own views first — another context on the
+    session may have bound the same ``db_table`` names to other
+    sources — then parses and analyzes the SQL anew."""
 
     context: Context
     rewritten: str
     coerce: bool = False
+    views: dict[str, DataFrame] = field(default_factory=dict)
 
     def run(self, vars: dict[str, Any] | None = None) -> DataFrame:
+        _bind_views(self.context.spark, self.views)
         return self.context._run(self.rewritten, vars, self.coerce)
 
     __call__ = run

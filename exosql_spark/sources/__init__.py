@@ -30,21 +30,53 @@ def _require_dir(path: str) -> None:
         raise AnalysisException(f"[PATH_NOT_FOUND] Path does not exist: {path}")
 
 
+def _file_tables(
+    path: str, patterns: tuple[str, ...], load: Callable[[str], DataFrame]
+) -> dict[str, DataFrame]:
+    """{file stem: load(entry)} for the entries of directory ``path``
+    matching ``patterns``."""
+    _require_dir(path)
+    tables: dict[str, DataFrame] = {}
+    for f in sorted(f for p in patterns for f in glob.glob(os.path.join(path, p))):
+        name = os.path.splitext(os.path.basename(f))[0]
+        if name in tables:
+            # name.jsonl + name.json would otherwise silently keep
+            # only the later-globbed file as the table
+            raise ValueError(
+                f"{path!r}: duplicate table name {name!r} "
+                f"(more than one of {', '.join(patterns)} match it)"
+            )
+        tables[name] = load(f)
+    return tables
+
+
+def _memo_read(
+    spark: SparkSession, kind: str, read: Callable[[str], DataFrame], *opts: Any
+) -> Callable[[str], DataFrame]:
+    """Loader that reads an entry once per session until its files change
+    (:func:`exosql_spark.io.memoized`, keyed by kind, absolute path and
+    the read options)."""
+    from exosql_spark.io import memoized
+
+    return lambda f: memoized(
+        spark, (kind, os.path.abspath(f), *opts), f, lambda: read(f)
+    )
+
+
 def csv_dir(spark: SparkSession, path: str, infer_schema: bool = True) -> dict[str, DataFrame]:
     """Directory of ``*.csv`` = database; file stem = table; header row =
     columns. With ``infer_schema=False`` reproduces the reference's
     all-values-are-strings model (``lib/exosql/csv.ex``) for coercion
     compat tests."""
-    _require_dir(path)
-    tables = {}
-    for f in sorted(glob.glob(os.path.join(path, "*.csv"))):
-        name = os.path.splitext(os.path.basename(f))[0]
-        tables[name] = (
+
+    def read(f: str) -> DataFrame:
+        return (
             spark.read.option("header", "true")
             .option("inferSchema", str(infer_schema).lower())
             .csv(f)
         )
-    return tables
+
+    return _file_tables(path, ("*.csv",), _memo_read(spark, "csv", read, infer_schema))
 
 
 def jsonl_dir(spark: SparkSession, path: str) -> dict[str, DataFrame]:
@@ -52,22 +84,11 @@ def jsonl_dir(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     file stem = table.  Schema inferred per file — the standard
     interchange format for scraped/exported corpora, and the one the
     CSV model can't carry nested fields through."""
-    _require_dir(path)
-    tables = {}
-    for f in sorted(
-        glob.glob(os.path.join(path, "*.jsonl"))
-        + glob.glob(os.path.join(path, "*.json"))
-    ):
-        name = os.path.splitext(os.path.basename(f))[0]
-        if name in tables:
-            # name.jsonl + name.json would otherwise silently keep
-            # only the later-globbed file as the table
-            raise ValueError(
-                f"jsonl_dir({path!r}): duplicate table name {name!r} "
-                "(both .jsonl and .json present)"
-            )
-        tables[name] = spark.read.json(f)
-    return tables
+    return _file_tables(
+        path,
+        ("*.jsonl", "*.json"),
+        _memo_read(spark, "jsonl", lambda f: spark.read.json(f)),
+    )
 
 
 def orc_dir(spark: SparkSession, path: str) -> dict[str, DataFrame]:
@@ -76,24 +97,21 @@ def orc_dir(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     The second binary columnar format next to parquet; predicate
     pushdown and column pruning come through the native ORC reader
     exactly as for parquet (Catalyst sees the same relation API)."""
-    _require_dir(path)
-    tables = {}
-    for f in sorted(glob.glob(os.path.join(path, "*.orc"))):
-        name = os.path.splitext(os.path.basename(f))[0]
-        tables[name] = spark.read.orc(f)
-    return tables
+    return _file_tables(
+        path, ("*.orc",), _memo_read(spark, "orc", lambda f: spark.read.orc(f))
+    )
 
 
 def parquet_dir(spark: SparkSession, path: str) -> dict[str, DataFrame]:
-    """Directory of ``*.parquet`` = database (the testdata layout)."""
+    """Directory of ``*.parquet`` = database (the testdata layout); each
+    table is :func:`exosql_spark.io.load_table`, memoized the same way."""
     from exosql_spark.io import load_table
 
-    _require_dir(path)
-    tables = {}
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        name = os.path.splitext(os.path.basename(f))[0]
-        tables[name] = load_table(spark, path, name)
-    return tables
+    return _file_tables(
+        path,
+        ("*.parquet",),
+        lambda f: load_table(spark, path, os.path.splitext(os.path.basename(f))[0]),
+    )
 
 
 def env_table(spark: SparkSession) -> dict[str, DataFrame]:
