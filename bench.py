@@ -9,7 +9,7 @@ as the FINAL line of stdout — a COMPACT summary (everything except
 the per-query map):
 
   {"metric": "...", "value": N, "unit": "sec", "estimator":
-   "min_of_5", "n_queries": K, "query_set_sha1": "...",
+   "interleaved_min_of_5", "n_queries": K, "query_set_sha1": "...",
    "calibration_sec": ..., "calibration_shuffle_sec": ...,
    "queries_detail": "BENCH_DETAIL.json", "sf": ...}
 
@@ -18,32 +18,45 @@ and parses the last line: a single line carrying the per-query map
 outgrew that window twice (BENCH_r05.json and — after the set reached
 62 queries — BENCH_r12.json both recorded ``parsed: null``, truncating
 away the head scalars and breaking tools/compare_bench.py).  The
-compact summary stays ≲600 chars regardless of catalog growth — ≲400
-on a clean sweep, plus four repass calibration scalars when a
-storm-repass ran (tests/test_tools.py pins the worst case under 800)
-— so the driver artifact always parses and always carries every
-calibration scalar; the per-query map lives
-in the first stdout line and, durably, in ``BENCH_DETAIL.json`` next
-to this script — snapshotted per round as ``BENCH_DETAIL_r{N}.json``
-(tools/gen_freshness.py does this at round start), which is also the
-comparator's fallback for artifacts whose tail did overflow.
-``query_set_sha1`` pins the headline's basis: "value" sums over
-exactly the listed queries, so a round-over-round diff of "value" is
-only meaningful when the hash matches — compare per-query numbers
-over the set intersection otherwise.
+compact summary stays ≲600 chars regardless of catalog growth, so a
+bounded tail capture always parses and always carries every calibration
+scalar; the per-query map lives in the first stdout line and, durably,
+in ``BENCH_DETAIL.json`` next to this script — snapshotted per round
+as ``BENCH_DETAIL_r{N}.json`` (tools/gen_freshness.py does this at
+round start), which is also the comparator's fallback for artifacts
+whose tail did overflow.  ``query_set_sha1`` pins the headline's
+basis: "value" sums over exactly the listed queries, so a
+round-over-round diff of "value" is only meaningful when the hash
+matches — compare per-query numbers over the set intersection
+otherwise.
 
-value = sum of per-query wall seconds (post-warmup, MIN of 5 runs).
-Min-of-N rather than median: this box is a VM whose host shows
-intermittent CPU-steal storms (cumulative steal ≈ 38% of user time in
-/proc/stat; individual runs of an identical 2 s plan were measured at
-2 s / 12 s / 42 s purely by arrival time).  The minimum is the standard
-noise-robust estimator for "what does the plan cost" (same reason
-timeit reports min); median and stddev still land in BENCH_DETAIL.json
-so diffs can be read against run noise.
+value = sum of per-query wall seconds, each the MIN of 5 runs taken
+in an interleaved sweep:
+
+1. one warm pass runs every entry once (JVM/codegen, parquet footers,
+   Python workers); its wall time is recorded as ``cold_sec`` and its
+   executed plan gives ``plan_shuffles``;
+2. ``SPARK_GRAFT_BENCH_RUNS`` (default 5) timed passes then each visit
+   every entry once, releasing operator persists before each run, so
+   every timed run pays its own persist build.
+
+Every run goes through :func:`time_run`, which materializes the FULL
+result plan through the no-op sink (``count()`` let Catalyst prune
+windows, sorts and joins) under its own job group; ``jobs`` in the
+detail file is the last run's job count.  ``SESSION_CONF`` sizes the
+codegen cache to hold every entry's generated classes, so the
+interleaving recompiles nothing.  An entry's 5 samples span the whole
+sweep, so a CPU-steal storm on a shared VM (identical 2 s plans have
+measured 2 s / 12 s / 42 s purely by arrival time) inflates at most a
+few of them, and the minimum — the standard noise-robust estimator
+for "what does the plan cost", the reason timeit reports min — needs
+no repair pass.  Median and stddev still land in BENCH_DETAIL.json so
+diffs can be read against run noise.
 
 ``calibration_sec`` (headline + detail) is a data-free machine scalar
 (codegen sum over range(10⁹), min of 3) measured in the same session
-just before the sweep: divide cross-round per-query ratios by the
+after the warm pass, just before the timed passes (``*_end``: just
+after them): divide cross-round per-query ratios by the
 calibration ratio to separate box drift from code changes (see
 SCALE.md "environment drift").  ``calibration_shuffle_sec`` (round 12
 on) is its scheduler/exchange-bound complement, and the detail file
@@ -54,6 +67,7 @@ normalize each query by the probe matching its plan class.
 from __future__ import annotations
 
 import hashlib
+import itertools
 import json
 import os
 import re
@@ -86,12 +100,68 @@ EXCLUDE = [
 ]
 
 
-def _run_once(fn, spark, sf_dir) -> float:
-    t0 = time.perf_counter()
-    df = fn(spark, sf_dir)
-    n = df.count()  # materialize the full result
-    assert n >= 0
-    return time.perf_counter() - t0
+#: Session confs for every bench-timed session.  The codegen cache
+#: must hold the whole sweep's generated classes: at Spark's default of
+#: 100 entries each interleaved pass recompiled all ~1.7k of them, so
+#: every timed run paid Janino compilation and ran unjitted code.
+SESSION_CONF = {
+    "spark.ui.showConsoleProgress": "false",
+    "spark.sql.codegen.cache.maxEntries": "4096",
+}
+
+_RUN_IDS = itertools.count()
+
+
+def time_run(spark, fn, sf_dir):
+    """The one timed run every bench path shares: build ``fn(spark,
+    sf_dir)`` and materialize its FULL result plan through the no-op
+    sink — a ``count()`` would let Catalyst prune windows, sorts,
+    joins and Python stages that feed only the output columns.  The
+    run's jobs go under their own job group, so the job count covers
+    eager driver jobs in the build as well as the final write.
+
+    Returns (wall seconds, job count, the built DataFrame)."""
+    sc = spark.sparkContext
+    group = f"bench_run_{next(_RUN_IDS)}"
+    sc.setJobGroup(group, group)
+    try:
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        sec = time.perf_counter() - t0
+    finally:
+        sc.setJobGroup(None, None)
+    return sec, len(sc.statusTracker().getJobIdsForGroup(group)), df
+
+
+def warm_pass(spark, entries: dict, sf_dir) -> tuple[dict, dict]:
+    """One run per entry, outside the estimator: covers JVM/codegen
+    warm-up, parquet footers and Python worker start-up.  Returns
+    (cold seconds, executed-plan shuffle count) per entry."""
+    cold, shuffles = {}, {}
+    for name, q in entries.items():
+        release_caches(spark)
+        cold[name], _, df = time_run(spark, q.fn, sf_dir)
+        shuffles[name] = _count_shuffles(df)
+    release_caches(spark)
+    return cold, shuffles
+
+
+def timed_passes(spark, entries: dict, sf_dir, runs: int) -> tuple[dict, dict]:
+    """``runs`` passes, each visiting every entry once, with the
+    operator persists released before each run so every run pays its
+    own persist build.  An entry's samples therefore span the whole
+    sweep, and a CPU-steal burst inflates at most one of them.
+    Returns (wall-second samples, last run's job count) per entry."""
+    samples: dict[str, list] = {name: [] for name in entries}
+    jobs: dict[str, int] = {}
+    for _ in range(runs):
+        for name, q in entries.items():
+            release_caches(spark)
+            sec, jobs[name], _ = time_run(spark, q.fn, sf_dir)
+            samples[name].append(sec)
+    release_caches(spark)
+    return samples, jobs
 
 
 def _calibrate(spark) -> float:
@@ -139,150 +209,6 @@ def _calibrate_shuffle(spark) -> float:
 
     once()  # warm the exchange/codegen paths
     return round(min(once() for _ in range(3)), 3)
-
-
-# Storm-repass thresholds (r16 verdict Next #2).  The calibration
-# band is SYMMETRIC — max(r, 1/r) > 1.25 — so a 21% slowdown of the
-# box (end/start = 0.79) trips it exactly like a 25% speedup would
-# (ADVICE r16 caught the asymmetric [0.8, 1.25] variant of this band
-# in compare_bench.py).  The spread gate (stddev/min > 0.25) selects
-# the entries whose 5 timed runs actually disagreed: on the r16 storm
-# sweep q1_pricing_summary recorded stddev 0.94 s on a 1.40 s min —
-# the motivating datum — while settled entries sit well under 0.1.
-CAL_DRIFT_BAND = 1.25
-REPASS_SPREAD_RATIO = 0.25
-# Cross-round drift tier (r17 verdict Next #2).  The spread gate has
-# a proven blind spot: a SLOW-VARYING steal storm keeps all 5
-# consecutive runs of one entry inside a single load regime, so the
-# level moves 2× while the spread stays tight —
-# recursive_cte_hierarchy sailed 0.952→1.279→2.609 s across
-# r15/r16/r17 with spread ratios under 0.18 and was never selected.
-# The drift tier compares each entry's pass-1 min against the PRIOR
-# round's committed BENCH_DETAIL min instead: >1.5× slower with an
-# UNCHANGED code fingerprint is a level shift no code explains, so it
-# earns a re-measurement regardless of what the in-sweep calibration
-# pair saw.  When the pair DID trip, the tighter 1.25 band applies
-# (ADVICE r17: a uniform storm inflates all 5 runs together, yielding
-# low spread — the r16 "53/69 uniformly ~1.4×" shape — so
-# prior-round level movement is the only in-sweep signal left).
-DRIFT_REPASS_RATIO = 1.5
-
-
-def storm_repass_tiers(
-    mins: dict,
-    stddevs: dict,
-    cal_pairs,
-    band: float = CAL_DRIFT_BAND,
-    spread_ratio: float = REPASS_SPREAD_RATIO,
-    prior_mins: dict | None = None,
-    changed=(),
-    drift_ratio: float = DRIFT_REPASS_RATIO,
-) -> dict:
-    """Entries needing a second measurement pass → selection reason
-    (``"spread"``, ``"drift"``, or ``"spread+drift"``).
-
-    Two OR-ed tiers, both pure so tests can pin the selection on
-    synthetic data without a SparkSession:
-
-    *Spread tier* (r16): ``cal_pairs`` is a sequence of (start, end)
-    calibration scalars from the same sweep (CPU probe + shuffle
-    probe).  If any pair moved more than ``band`` in either
-    direction, the box moved DURING the sweep (the r16 steal storm:
-    53/69 entries ~1.4× slower while the start-of-sweep calibrations
-    read faster), and the entries whose own 5 runs disagreed
-    (stddev/min > ``spread_ratio``) get re-measured after the sweep,
-    when the storm has typically passed.
-
-    *Drift tier* (r17): an entry whose pass-1 min exceeds its PRIOR
-    round's committed min (``prior_mins``) by ``drift_ratio`` — or by
-    ``band`` when a calibration pair tripped, per ADVICE r17's
-    uniform-storm note — while its code fingerprint is unchanged
-    (``changed`` holds the names whose fingerprint moved) is a level
-    shift the code cannot explain; it gets re-measured even on a
-    sweep whose own calibration pair was quiet, closing the
-    slow-varying-storm blind spot that let recursive_cte_hierarchy's
-    tight-spread 2.7× inflation cross three round boundaries
-    unmeasured.  Entries with changed fingerprints are excluded — a
-    real code regression SHOULD survive into the record and flag in
-    the comparator, not be min-washed away by a repass.
-    """
-    def moved(start, end) -> bool:
-        if not start or not end:
-            return False
-        r = end / start
-        return max(r, 1.0 / r) > band
-
-    cal_moved = any(moved(s, e) for s, e in cal_pairs)
-    tiers: dict[str, str] = {}
-    if cal_moved:
-        for name, m in mins.items():
-            if m > 0 and stddevs.get(name, 0.0) / m > spread_ratio:
-                tiers[name] = "spread"
-    if prior_mins:
-        threshold = band if cal_moved else drift_ratio
-        for name, m in mins.items():
-            prior = prior_mins.get(name)
-            if m > 0 and prior and prior > 0 and name not in changed:
-                if m / prior > threshold:
-                    tiers[name] = (
-                        "spread+drift" if tiers.get(name) == "spread" else "drift"
-                    )
-    return tiers
-
-
-def storm_repass_entries(
-    mins: dict,
-    stddevs: dict,
-    cal_pairs,
-    band: float = CAL_DRIFT_BAND,
-    spread_ratio: float = REPASS_SPREAD_RATIO,
-    prior_mins: dict | None = None,
-    changed=(),
-    drift_ratio: float = DRIFT_REPASS_RATIO,
-) -> list:
-    """Sorted names needing a second pass — ``storm_repass_tiers``
-    without the reasons; kept as the stable pinned surface (the r16
-    synthetic tests and the hypothesis property test call this)."""
-    return sorted(
-        storm_repass_tiers(
-            mins, stddevs, cal_pairs, band, spread_ratio,
-            prior_mins, changed, drift_ratio,
-        )
-    )
-
-
-def _drift_tier_inputs(current_sf, repo: str | None = None):
-    """Load (prior_mins, changed, prior_round) for the drift tier —
-    best-effort: the prior round's committed BENCH_DETAIL_r{N}.json
-    (N = FRESHNESS.json's latest_round, the same snapshot
-    tools/round_start.py writes) plus the set of entries whose
-    current-disk fingerprint differs from the FRESHNESS record.  Any
-    missing/corrupt input, an SF mismatch (cross-SF mins aren't
-    comparable — auxiliary 10×/100× sweeps must not diff against the
-    sf0.1 record), or a fingerprint walk failure degrades to
-    (None, frozenset(), None): bench falls back to the spread tier
-    alone rather than crashing or mis-selecting."""
-    if repo is None:
-        repo = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(repo, "FRESHNESS.json")) as f:
-            fresh = json.load(f)
-        prior_round = int(fresh["latest_round"])
-        with open(
-            os.path.join(repo, f"BENCH_DETAIL_r{prior_round}.json")
-        ) as f:
-            prior = json.load(f)
-        if prior.get("sf") != current_sf:
-            return None, frozenset(), None
-        prior_mins = prior.get("min") or {}
-        from exosql_spark import catalog as _catalog
-
-        cur = _catalog.current_fingerprints(_catalog.all_queries())
-        rec = fresh.get("fingerprints", {})
-        changed = frozenset(n for n, fp in cur.items() if rec.get(n) != fp)
-        return prior_mins, changed, prior_round
-    except (OSError, json.JSONDecodeError, KeyError, TypeError, ValueError):
-        return None, frozenset(), None
 
 
 def _gen_explain_module():
@@ -456,10 +382,7 @@ def summary_line(out: dict) -> str:
 def main() -> None:
     # Stage-progress bars write \r-spam to stderr/stdout that crowded the
     # driver's tail capture in r4/r5 — keep the bench process silent.
-    spark = get_spark(
-        app_name="exosql_spark_bench",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = get_spark(app_name="exosql_spark_bench", extra_conf=SESSION_CONF)
     all_bench = {n: q for n, q in all_queries().items() if q.bench}
     unknown = [n for n in EXCLUDE if n not in all_bench]
     if unknown:
@@ -470,101 +393,27 @@ def main() -> None:
         )
     bench = {n: q for n, q in all_bench.items() if n not in EXCLUDE}
 
+    cold_sec, plan_shuffles = warm_pass(spark, bench, SF_DIR)
+    # The calibration pair brackets only the timed passes: taken
+    # before the warm pass, the start probes read JIT warm-up as box
+    # drift (1.7–5× slower than the end probes on every r16–r19 sweep).
+    # tools/compare_bench.py warns when the two ends diverge.
     calibration = _calibrate(spark)
     calibration_shuffle = _calibrate_shuffle(spark)
-    per_query: dict[str, float] = {}
-    medians: dict[str, float] = {}
-    spread: dict[str, float] = {}
-    plan_shuffles: dict[str, int] = {}
-    for name, q in bench.items():
-        # Release the PREVIOUS query's operator-internal persists
-        # (registered with exosql_spark.cache), then warm THIS query:
-        # one untimed run covers JVM/codegen/parquet footers, Python
-        # worker pools for the pandas-UDF stages, and repopulates the
-        # query's own barriers. Spark's cache manager dedupes persists
-        # by analyzed plan, so the 5 timed runs then reuse the warm
-        # caches — steady-state timing — while storage memory stays
-        # flat across the sweep (at most one query's caches live).
-        release_caches(spark)
-        warm_df = q.fn(spark, SF_DIR)
-        warm_df.count()
-        plan_shuffles[name] = _count_shuffles(warm_df)
-        times = [_run_once(q.fn, spark, SF_DIR) for _ in range(RUNS)]
-        per_query[name] = round(min(times), 3)
-        medians[name] = round(statistics.median(times), 3)
-        # stdev needs ≥2 samples; RUNS=1 smoke sweeps get 0.0
-        spread[name] = round(statistics.stdev(times), 3) if len(times) > 1 else 0.0
-    release_caches(spark)
-    # End-of-sweep calibration pair (r16): ONE calibration per sweep
-    # cannot see an intra-sweep steal storm — the r16 sweep had 53/69
-    # entries uniformly ~1.4× slower than the prior record while the
-    # (start-of-sweep) calibrations read FASTER.  A start/end pair
-    # bounds when the box moved; tools/compare_bench.py warns when the
-    # two ends diverge, marking the sweep's normalization columns
-    # untrustworthy.
+    samples, jobs = timed_passes(spark, bench, SF_DIR, RUNS)
     calibration_end = _calibrate(spark)
     calibration_shuffle_end = _calibrate_shuffle(spark)
 
-    # Storm-RESILIENT second pass (r16 verdict Next #2): detection
-    # alone (the pair + comparator warning) still blanked the whole
-    # r16 regression signal.  When the calibration pair says the box
-    # moved during the sweep, re-measure the entries whose own runs
-    # disagreed, on the now-settled box, and take the min over BOTH
-    # passes (the min is the cost estimator; a storm only ever
-    # inflates).  The cross-round DRIFT tier (r17 verdict Next #2)
-    # additionally re-measures entries whose pass-1 min regressed
-    # past the prior round's committed min with an unchanged code
-    # fingerprint — the slow-varying-storm shape the spread gate is
-    # blind to.  Both passes land in BENCH_DETAIL with per-entry
-    # selection reasons so the comparator can see which pass and
-    # which tier produced each recorded number.
+    per_query = {n: round(min(t), 3) for n, t in samples.items()}
+    medians = {n: round(statistics.median(t), 3) for n, t in samples.items()}
+    # stdev needs ≥2 samples; RUNS=1 smoke sweeps get 0.0
+    spread = {
+        n: round(statistics.stdev(t), 3) if len(t) > 1 else 0.0
+        for n, t in samples.items()
+    }
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    prior_mins, fp_changed, drift_prior_round = _drift_tier_inputs(sf_val)
-    repass_tiers = storm_repass_tiers(
-        per_query,
-        spread,
-        [
-            (calibration, calibration_end),
-            (calibration_shuffle, calibration_shuffle_end),
-        ],
-        prior_mins=prior_mins,
-        changed=fp_changed,
-    )
-    repass_names = sorted(repass_tiers)
-    second_pass: dict[str, dict] = {}
-    measurement_pass = {name: 1 for name in per_query}
-    repass_calibration = repass_calibration_end = None
-    repass_calibration_shuffle = repass_calibration_shuffle_end = None
-    if repass_names:
-        repass_calibration = _calibrate(spark)
-        repass_calibration_shuffle = _calibrate_shuffle(spark)
-        for name in repass_names:
-            q = bench[name]
-            release_caches(spark)
-            q.fn(spark, SF_DIR).count()  # re-warm
-            times = [_run_once(q.fn, spark, SF_DIR) for _ in range(RUNS)]
-            rec = {
-                "min": round(min(times), 3),
-                "median": round(statistics.median(times), 3),
-                "stddev": round(statistics.stdev(times), 3)
-                if len(times) > 1
-                else 0.0,
-            }
-            second_pass[name] = rec
-            if rec["min"] < per_query[name]:
-                per_query[name] = rec["min"]
-                measurement_pass[name] = 2
-        release_caches(spark)
-        # bound the second pass's own window with BOTH probes (same
-        # independence argument as the main sweep's pair): if this
-        # pair diverges too, the repass numbers are equally suspect.
-        # The pairs ride the HEADLINE record (only when a repass ran)
-        # so tools/compare_bench.py's drift loop warns on them with
-        # the same symmetric band it applies to the main pairs.
-        repass_calibration_end = _calibrate(spark)
-        repass_calibration_shuffle_end = _calibrate_shuffle(spark)
-
+    estimator = f"interleaved_min_of_{RUNS}"
     query_set = sorted(per_query)
     set_sha1 = hashlib.sha1("\n".join(query_set).encode()).hexdigest()[:12]
     detail = {
@@ -573,7 +422,9 @@ def main() -> None:
         "calibration_sec_end": calibration_end,
         "calibration_shuffle_sec_end": calibration_shuffle_end,
         "plan_shuffles": plan_shuffles,
-        "estimator": f"min_of_{RUNS}",
+        "cold_sec": {n: round(t, 3) for n, t in cold_sec.items()},
+        "jobs": jobs,
+        "estimator": estimator,
         "excluded": sorted(EXCLUDE),
         "n_queries": len(per_query),
         "query_set": query_set,
@@ -582,14 +433,6 @@ def main() -> None:
         "median": medians,
         "stddev": spread,
         "median_total": round(sum(medians.values()), 3),
-        "measurement_pass": measurement_pass,
-        "second_pass": second_pass,
-        "repass_tier": repass_tiers,
-        "drift_prior_round": drift_prior_round,
-        "repass_calibration_sec": repass_calibration,
-        "repass_calibration_sec_end": repass_calibration_end,
-        "repass_calibration_shuffle_sec": repass_calibration_shuffle,
-        "repass_calibration_shuffle_sec_end": repass_calibration_shuffle_end,
         "sf": sf_val,
     }
     with open(DETAIL_PATH, "w") as f:
@@ -605,24 +448,10 @@ def main() -> None:
         "calibration_shuffle_sec": calibration_shuffle,
         "calibration_sec_end": calibration_end,
         "calibration_shuffle_sec_end": calibration_shuffle_end,
-        "estimator": f"min_of_{RUNS}",
+        "estimator": estimator,
         "n_queries": len(per_query),
-        "n_repassed": len(second_pass),
-        "n_repassed_drift": sum(1 for t in repass_tiers.values() if "drift" in t),
         "query_set_sha1": set_sha1,
         "queries": per_query,
-        # present only when a storm-repass ran — keeps the compact
-        # summary line small in the (common) clean-sweep case
-        **(
-            {
-                "repass_calibration_sec": repass_calibration,
-                "repass_calibration_sec_end": repass_calibration_end,
-                "repass_calibration_shuffle_sec": repass_calibration_shuffle,
-                "repass_calibration_shuffle_sec_end": repass_calibration_shuffle_end,
-            }
-            if repass_names
-            else {}
-        ),
         "sf": sf_val,
     }
     spark.stop()

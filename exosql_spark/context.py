@@ -244,7 +244,9 @@ def query(
 ) -> DataFrame:
     """``ExoSQL.query(sql, context)`` equivalent; returns a DataFrame
     (lazy — the reference returned fully-materialized rows; callers
-    ``.collect()`` at the edge if they need that)."""
+    ``.collect()`` at the edge if they need that).  Run one query per
+    session at a time: iterative operators' loop scopes change the
+    shared session conf while they run (see ``iterative.loop_conf``)."""
     ctx = context if isinstance(context, Context) else Context(spark, context or {})
     return ctx.sql(sql, vars, coerce=coerce)
 

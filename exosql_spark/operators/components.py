@@ -23,6 +23,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+_INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -44,11 +47,24 @@ def connected_components(
     chains longer than 20 hops; found by the large-star/small-star
     equivalence test). For diameter-heavy graphs prefer
     :func:`connected_components_star`, whose round count is
-    O(log² n) regardless of diameter."""
+    O(log² n) regardless of diameter.
+
+    Ids must be integral (byte, short, int or long): convergence is
+    detected by an unchanged Σ of labels, which is only sound for
+    integers. Any other ``src``/``dst`` type raises ``TypeError``
+    before a job runs."""
     from pyspark.sql import Observation
 
     from exosql_spark.operators.iterative import loop_conf, loop_partitions
 
+    dtypes = dict(edges.dtypes)
+    for c in (src, dst):
+        # a missing column is left to Spark's own analysis error
+        if c in dtypes and dtypes[c] not in _INTEGRAL_TYPES:
+            raise TypeError(
+                f"connected_components needs integral ids; column {c!r} "
+                f"has type {dtypes[c]}"
+            )
     # symmetrize once: propagate both directions; the row counts ride
     # the two init checkpoints via observe (r19, zero extra jobs) to
     # size the iteration scope's partitions

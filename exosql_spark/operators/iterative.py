@@ -51,7 +51,10 @@ def loop_partitions(spark, n_rows: int) -> tuple[int, int]:
 @contextmanager
 def loop_conf(spark, partitions: int):
     """AQE-off + pinned shuffle partitions for the scope's duration;
-    always restores the caller's confs (exception path included)."""
+    always restores the caller's confs (exception path included).
+    The overrides go on the shared session conf, so run one query per
+    session at a time: a query planned concurrently on the same session
+    inherits them."""
     conf = spark.conf
     saved_aqe = conf.get("spark.sql.adaptive.enabled")
     saved_p = conf.get("spark.sql.shuffle.partitions")

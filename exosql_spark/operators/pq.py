@@ -204,8 +204,14 @@ def _adc_table(q_vec: list[float], codebooks: list[list[list[float]]]) -> list[l
 def _qid_type(queries, query_id_col: str) -> str:
     """Query-id SQL type: from the frame's schema, or ``bigint`` for
     pre-collected row lists (the collect_vectors contract — ids are
-    the stored bigint vec_ids)."""
+    the stored bigint vec_ids; any other id raises ``ValueError``)."""
     if isinstance(queries, list):
+        bad = [q[0] for q in queries if type(q[0]) is not int]
+        if bad:
+            raise ValueError(
+                f"pre-collected queries need int ids; got {bad[0]!r} "
+                f"({type(bad[0]).__name__})"
+            )
         return "bigint"
     return dict(queries.dtypes)[query_id_col]
 
@@ -450,6 +456,7 @@ def ivfpq_topk(
     """
     from exosql_spark.operators.similarity import _hyperplanes
 
+    qid_type = _qid_type(queries, query_id_col)
     cents = centroids if centroids is not None else _hyperplanes(dim, n_cells, seed)
     n_cells = len(cents)
 
@@ -461,7 +468,6 @@ def ivfpq_topk(
             corpus, codebooks, cents, vec_col, id_col, encoder
         )
 
-    qid_type = _qid_type(queries, query_id_col)
     qs = (
         queries
         if isinstance(queries, list)

@@ -377,6 +377,21 @@ class TestProductQuantization:
             assert got.columns == ["query_id", "vec_id", "approx_sq_dist", "rank"]
             assert got.count() == 0
 
+    def test_precollected_query_ids_must_be_int(self, corpus):
+        """Pre-collected query lists are typed bigint; a string id is a
+        caller error, not a createDataFrame failure deep in the plan."""
+        from exosql_spark.operators import pq
+
+        books = pq.train_codebooks(corpus, m=4, k=8, iters=1, dim=16)
+        codes = pq.pq_encode(corpus, books)
+        qs = [("q0", [0.0] * 16)]
+        for fn in (
+            lambda: pq.pq_topk(codes, qs, books, k=5),
+            lambda: pq.ivfpq_topk(corpus, qs, books, k=5, n_cells=8, n_probe=3, dim=16),
+        ):
+            with pytest.raises(ValueError, match="need int ids"):
+                fn()
+
     def test_ivfpq_encoded_layout_and_trained_centroids(self, corpus, tmp_path, spark):
         """The IVFADC stored layout: ivfpq_encode (ONE fused map — no
         join in the plan) with TRAINED coarse centroids, written
@@ -1384,6 +1399,16 @@ class TestConnectedComponents:
         assert comp[1] == comp[2] == comp[3] == 1
         assert comp[10] == comp[11] == 10
         assert comp[20] == comp[21] == comp[22] == comp[23] == 20
+
+    def test_non_integral_ids_rejected(self, spark):
+        """The Σ-label convergence check is only sound for integral ids;
+        string ids must fail at the boundary, not after a cast error
+        (or a wrong one-round exit) inside the loop."""
+        from exosql_spark.operators.components import connected_components
+
+        edges = spark.createDataFrame([("a", "b"), ("b", "c")], "id_a string, id_b string")
+        with pytest.raises(TypeError, match="'id_a' has type string"):
+            connected_components(edges)
 
     def test_star_algorithm_matches_label_propagation(self, spark):
         """connected_components_star (large-star/small-star — the

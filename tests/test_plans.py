@@ -6,6 +6,7 @@ scale-up; failing them means a plan regression even if results match."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from exosql_spark.io import Tables
@@ -1000,3 +1001,77 @@ class TestRound16Plans:
         out = capsys.readouterr().out
         assert "intra-sweep steal storm" in out, out
         assert out.count("WARNING") == 1, out  # shuffle pair + old side silent
+
+
+# -- bench timing runs the full result plan ----------------------------
+
+
+def _plan_classes(spark, since: int) -> list[set[str]]:
+    """Operator names of each SQL execution with id >= ``since``."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = []
+    for i in range(execs.length()):
+        eid = execs.apply(i).executionId()
+        if eid < since:
+            continue
+        nodes = store.planGraph(eid).allNodes()
+        out.append((eid, {_norm_node(nodes.apply(j).name()) for j in range(nodes.length())}))
+    return [names for _, names in sorted(out)]
+
+
+def _norm_node(name: str) -> str:
+    import re
+
+    name = re.sub(r" \(\d+\)$", "", name)  # codegen stage ids differ per execution
+    return "Limit" if name.endswith("Limit") else name
+
+
+#: The no-op sink's own write node; everything under it is the result plan.
+_NOOP_WRITE = {"OverwriteByExpression"}
+
+#: AQE's EmptyRelation keeps the logical subtree it replaced; whether its
+#: leaf renders as LogicalRelation differs between executions.
+_RENDERING_ONLY = {"LogicalRelation"}
+
+
+def _next_execution_id(spark) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore().executionsCount()
+
+
+def _bench_names() -> list[str]:
+    from exosql_spark.catalog import all_queries
+
+    return sorted(n for n, q in all_queries().items() if q.bench)
+
+
+class TestBenchTimesFullPlan:
+    """bench.time_run must execute the operator classes that collecting
+    the entry's result does — a ``count()`` lets Catalyst prune windows,
+    sorts, joins and Python stages, so the bench would time a smaller
+    plan than the one EXPLAIN.md documents."""
+
+    @pytest.mark.parametrize("name", _bench_names())
+    def test_timed_plan_is_the_collected_plan(self, spark, sf_dir, name):
+        from exosql_spark.catalog import all_queries
+        from exosql_spark.cache import release_caches
+
+        bench = TestRound15Plans._load_tool("bench_for_full_plan_test", "bench.py")
+        fn = all_queries()[name].fn
+        # both sides build from released caches: a collect over the
+        # timed run's persists would let AQE re-plan joins from the
+        # materialized cache's size
+        release_caches(spark)
+        mark = _next_execution_id(spark)
+        bench.time_run(spark, fn, sf_dir)
+        timed = _plan_classes(spark, mark)[-1]
+        release_caches(spark)
+        mark = _next_execution_id(spark)
+        fn(spark, sf_dir).collect()
+        collected = _plan_classes(spark, mark)[-1]
+        release_caches(spark)
+        timed = timed - _NOOP_WRITE - _RENDERING_ONLY
+        collected = collected - _RENDERING_ONLY
+        assert timed == collected, timed ^ collected

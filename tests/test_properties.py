@@ -387,128 +387,3 @@ class TestRound14Properties:
             for v in verts:
                 assert abs(got[v][0] - h[v]) < 1e-12, (iters, v)
                 assert abs(got[v][1] - a[v]) < 1e-12, (iters, v)
-
-
-# -- bench storm-repass selector (r17) --------------------------------
-
-
-def _bench_module():
-    import importlib.util as ilu
-    import os
-
-    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "bench.py")
-    spec = ilu.spec_from_file_location("bench_props", path)
-    mod = ilu.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-@given(
-    mins=st.dictionaries(
-        st.text(alphabet="abcdefgh_", min_size=1, max_size=8),
-        st.floats(min_value=0.0, max_value=100.0, allow_nan=False),
-        max_size=12,
-    ),
-    stds=st.dictionaries(
-        st.text(alphabet="abcdefgh_", min_size=1, max_size=8),
-        st.floats(min_value=0.0, max_value=50.0, allow_nan=False),
-        max_size=12,
-    ),
-    pairs=st.lists(
-        st.tuples(
-            st.one_of(st.none(), st.floats(min_value=0.01, max_value=10.0)),
-            st.one_of(st.none(), st.floats(min_value=0.01, max_value=10.0)),
-        ),
-        max_size=3,
-    ),
-)
-@settings(max_examples=300, deadline=None)
-def test_storm_repass_selector_properties(mins, stds, pairs):
-    """Invariants of bench.storm_repass_entries on arbitrary inputs:
-    the result is a SORTED SUBSET of the measured entries; nothing is
-    selected when no calibration pair moved past the symmetric band
-    (or when every pair has a missing scalar); every selected entry
-    really has stddev/min above the spread gate; and tightening the
-    spread gate never ADDS entries."""
-    bench = _bench_module()
-    out = bench.storm_repass_entries(mins, stds, pairs)
-    assert out == sorted(out)
-    assert set(out) <= set(mins)
-    moved = any(
-        s and e and max(e / s, s / e) > bench.CAL_DRIFT_BAND for s, e in pairs
-    )
-    if not moved:
-        assert out == []
-    for name in out:
-        assert mins[name] > 0
-        assert stds.get(name, 0.0) / mins[name] > bench.REPASS_SPREAD_RATIO
-    tighter = bench.storm_repass_entries(mins, stds, pairs, spread_ratio=0.5)
-    assert set(tighter) <= set(out)
-
-
-@given(
-    mins=st.dictionaries(
-        st.text(alphabet="abcdefgh_", min_size=1, max_size=8),
-        st.floats(min_value=0.0, max_value=100.0, allow_nan=False),
-        max_size=12,
-    ),
-    stds=st.dictionaries(
-        st.text(alphabet="abcdefgh_", min_size=1, max_size=8),
-        st.floats(min_value=0.0, max_value=50.0, allow_nan=False),
-        max_size=12,
-    ),
-    pairs=st.lists(
-        st.tuples(
-            st.one_of(st.none(), st.floats(min_value=0.01, max_value=10.0)),
-            st.one_of(st.none(), st.floats(min_value=0.01, max_value=10.0)),
-        ),
-        max_size=3,
-    ),
-    priors=st.dictionaries(
-        st.text(alphabet="abcdefgh_", min_size=1, max_size=8),
-        st.floats(min_value=0.0, max_value=100.0, allow_nan=False),
-        max_size=12,
-    ),
-    changed=st.frozensets(
-        st.text(alphabet="abcdefgh_", min_size=1, max_size=8), max_size=6
-    ),
-)
-@settings(max_examples=300, deadline=None)
-def test_storm_repass_drift_tier_properties(mins, stds, pairs, priors, changed):
-    """Invariants of the r17 drift tier on arbitrary inputs: tiers'
-    keys equal storm_repass_entries' selection; every drift-labeled
-    entry really exceeds the effective threshold vs a positive prior
-    and has an unchanged fingerprint; every spread-labeled entry
-    passes the spread gate under a tripped calibration; supplying
-    priors never REMOVES a spread selection; and the drift tier is
-    monotone — raising drift_ratio never adds entries."""
-    bench = _bench_module()
-    tiers = bench.storm_repass_tiers(
-        mins, stds, pairs, prior_mins=priors, changed=changed
-    )
-    out = bench.storm_repass_entries(
-        mins, stds, pairs, prior_mins=priors, changed=changed
-    )
-    assert out == sorted(tiers)
-    cal_moved = any(
-        s and e and max(e / s, s / e) > bench.CAL_DRIFT_BAND for s, e in pairs
-    )
-    threshold = bench.CAL_DRIFT_BAND if cal_moved else bench.DRIFT_REPASS_RATIO
-    base = set(bench.storm_repass_entries(mins, stds, pairs))
-    assert base <= set(out)
-    for name, tier in tiers.items():
-        assert tier in ("spread", "drift", "spread+drift")
-        if "drift" in tier:
-            assert name not in changed
-            assert priors.get(name, 0.0) > 0
-            assert mins[name] / priors[name] > threshold
-        if "spread" in tier:
-            assert cal_moved
-            assert stds.get(name, 0.0) / mins[name] > bench.REPASS_SPREAD_RATIO
-        if tier == "drift":
-            assert name not in base
-    looser = bench.storm_repass_entries(
-        mins, stds, pairs, prior_mins=priors, changed=changed, drift_ratio=3.0
-    )
-    if not cal_moved:
-        assert set(looser) <= set(out)

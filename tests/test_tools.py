@@ -607,38 +607,31 @@ class TestBenchArtifacts:
             "unit": "sec",
             "calibration_sec": 0.245,
             "calibration_shuffle_sec": 0.869,
-            "estimator": "min_of_5",
+            "calibration_sec_end": 0.177,
+            "calibration_shuffle_sec_end": 0.822,
+            "estimator": "interleaved_min_of_5",
             "n_queries": 640,
-            "n_repassed": 3,
-            "n_repassed_drift": 2,
             "query_set_sha1": "4a6c8042204c",
             "queries": {f"query_with_a_long_name_{i:03d}": 1.234 for i in range(640)},
             "sf": 0.1,
-            # worst case: a storm-repass ran, so all four repass
-            # calibration scalars ride the compact line too (r17)
-            "repass_calibration_sec": 0.177,
-            "repass_calibration_sec_end": 0.154,
-            "repass_calibration_shuffle_sec": 0.887,
-            "repass_calibration_shuffle_sec_end": 0.822,
         }
         line = bench.summary_line(out)
         parsed = json.loads(line)
         assert "queries" not in parsed
         assert parsed["calibration_sec"] == 0.245
         assert parsed["calibration_shuffle_sec"] == 0.869
-        assert parsed["repass_calibration_sec"] == 0.177
+        assert parsed["calibration_sec_end"] == 0.177
         assert parsed["value"] == 123.456
         assert parsed["query_set_sha1"] == "4a6c8042204c"
         assert parsed["queries_detail"] == "BENCH_DETAIL.json"
         assert "excluded" not in parsed and parsed["n_excluded"] == 600
-        assert len(line) < 800
+        assert len(line) <= 600
 
     def test_perquery_line_fits_tail_with_summary(self):
         """r18 verdict Next #2: the driver records only a bounded
         ~2000-char stdout tail, so the abbreviated per-query line PLUS
         the final summary line must fit it together — for the REAL
-        bench set, with worst-case 5-char values and the storm-repass
-        summary scalars present."""
+        bench set, with worst-case 5-char values."""
         import json
         import sys
 
@@ -658,17 +651,11 @@ class TestBenchArtifacts:
             "calibration_shuffle_sec": 0.869,
             "calibration_sec_end": 0.245,
             "calibration_shuffle_sec_end": 0.869,
-            "estimator": "min_of_5",
+            "estimator": "interleaved_min_of_5",
             "n_queries": len(names),
-            "n_repassed": 3,
-            "n_repassed_drift": 2,
             "query_set_sha1": "4a6c8042204c",
             "queries": {n: 12.34 for n in names},  # worst-case width
             "sf": 0.1,
-            "repass_calibration_sec": 0.177,
-            "repass_calibration_sec_end": 0.154,
-            "repass_calibration_shuffle_sec": 0.887,
-            "repass_calibration_shuffle_sec_end": 0.822,
         }
         pq_line = bench.perquery_line(out)
         s_line = bench.summary_line(out)
@@ -720,35 +707,10 @@ class TestBenchArtifacts:
         spec.loader.exec_module(bench)
         return bench
 
-    def test_detail_matching_sha_guard_and_fallback(self, tmp_path):
-        """compare_bench._detail_matching (r17): a FRESH artifact with
-        no per-round snapshot must resolve through the live
-        BENCH_DETAIL.json in its own directory, and a snapshot whose
-        query_set_sha1 does not match the record (stale snapshot vs a
-        re-run artifact) must be rejected rather than attributing the
-        wrong sweep's repass provenance."""
-        import json
-
-        cb = self._load_compare_bench()
-        rec = {"query_set_sha1": "abc123def456"}
-        live = {
-            "query_set_sha1": "abc123def456",
-            "second_pass": {"q": {"min": 1.0}},
-            "min": {"q": 1.0},
-        }
-        (tmp_path / "BENCH_DETAIL.json").write_text(json.dumps(live))
-        art = tmp_path / "fresh_run.json"  # name matches no BENCH_r{N}
-        art.write_text(json.dumps(rec))
-        got = cb._detail_matching(str(art), rec)
-        assert got is not None and got.get("second_pass")
-        # sha mismatch -> rejected
-        assert cb._detail_matching(str(art), {"query_set_sha1": "zzz"}) is None
-
     def test_detail_loaders_skip_corrupt_candidates(self, tmp_path):
-        """ADVICE r17: a truncated / mid-write detail file must cost
-        only the provenance note, not crash the comparison — both
-        _detail_for and _detail_matching skip unreadable candidates
-        and degrade to None."""
+        """ADVICE r17: a truncated / mid-write detail snapshot must
+        not crash the comparison — _detail_for skips unreadable
+        candidates and degrades to None."""
         import json
 
         cb = self._load_compare_bench()
@@ -757,166 +719,6 @@ class TestBenchArtifacts:
         art = tmp_path / "BENCH_r09.json"
         art.write_text(json.dumps({"query_set_sha1": "abc"}))
         assert cb._detail_for(str(art)) is None
-        # truncated live BENCH_DETAIL.json in the artifact dir too
-        (tmp_path / "BENCH_DETAIL.json").write_text("")
-        assert cb._detail_matching(str(art), {"query_set_sha1": "abc"}) is None
-
-    def test_storm_repass_selects_high_spread_on_drifted_sweep(self):
-        """r16 verdict Next #2: when the start/end calibration pair
-        diverges >25%, the entries whose 5 runs disagreed
-        (stddev/min > 0.25) get a second settled-box pass.  Synthetic
-        data modeled on the r16 storm: q1's 0.94 s stddev on a 1.40 s
-        min is in; a settled entry with 0.05 stddev on 1.0 s is out."""
-        bench = self._bench_module()
-        mins = {"q1": 1.40, "settled": 1.00, "also_spread": 0.50}
-        stds = {"q1": 0.94, "settled": 0.05, "also_spread": 0.20}
-        # CPU probe moved 1.4x during the sweep, shuffle probe stable
-        picked = bench.storm_repass_entries(
-            mins, stds, [(0.25, 0.35), (0.87, 0.88)]
-        )
-        assert picked == ["also_spread", "q1"]  # sorted, settled excluded
-
-    def test_storm_repass_empty_on_stable_calibration(self):
-        """No calibration movement -> one pass is trustworthy, even if
-        some entry has spread (spread alone is not a storm signal)."""
-        bench = self._bench_module()
-        assert (
-            bench.storm_repass_entries(
-                {"q": 1.0}, {"q": 0.9}, [(0.25, 0.26), (0.87, 0.86)]
-            )
-            == []
-        )
-
-    def test_storm_repass_band_is_symmetric(self):
-        """ADVICE r16: a 21% box SLOWDOWN (end/start = 0.79 ->
-        max(r, 1/r) = 1.266) must trip the same 1.25 band a 26%
-        speedup does; 0.81 (1.235) must not."""
-        bench = self._bench_module()
-        mins, stds = {"q": 1.0}, {"q": 0.9}
-        assert bench.storm_repass_entries(mins, stds, [(1.0, 0.79)]) == ["q"]
-        assert bench.storm_repass_entries(mins, stds, [(1.0, 0.81)]) == []
-        assert bench.storm_repass_entries(mins, stds, [(1.0, 1.26)]) == ["q"]
-
-    def test_storm_repass_guards_missing_and_zero(self):
-        """Missing calibration scalars (smoke sweeps) never trigger a
-        repass; a 0.0-min entry (round(min,3) of a sub-ms query) is
-        skipped rather than dividing by zero."""
-        bench = self._bench_module()
-        assert (
-            bench.storm_repass_entries({"q": 1.0}, {"q": 0.9}, [(None, 0.3)]) == []
-        )
-        assert (
-            bench.storm_repass_entries(
-                {"subms": 0.0, "q": 1.0},
-                {"subms": 0.5, "q": 0.9},
-                [(0.25, 0.40)],
-            )
-            == ["q"]
-        )
-
-    def test_drift_tier_selects_low_spread_monotone_regression(self):
-        """r17 verdict Next #2, the recursive_cte_hierarchy shape: a
-        quiet sweep (calibration pair stable), tight spread, but the
-        entry's min sits 2× over the prior round's committed min with
-        an unchanged fingerprint — the spread gate is blind to this
-        by construction; the drift tier must select it."""
-        bench = self._bench_module()
-        tiers = bench.storm_repass_tiers(
-            {"rcte": 2.609, "steady": 1.00},
-            {"rcte": 0.462, "steady": 0.05},  # spread ratio 0.177 < 0.25
-            [(0.25, 0.26), (0.87, 0.86)],  # calibration quiet
-            prior_mins={"rcte": 1.279, "steady": 0.98},
-            changed=frozenset(),
-        )
-        assert tiers == {"rcte": "drift"}
-        # 1.4x over prior on a quiet sweep stays UNDER the 1.5 tier
-        assert (
-            bench.storm_repass_tiers(
-                {"q": 1.4}, {"q": 0.0}, [(0.25, 0.26)],
-                prior_mins={"q": 1.0}, changed=frozenset(),
-            )
-            == {}
-        )
-
-    def test_drift_tier_tightens_to_band_when_calibration_trips(self):
-        """ADVICE r17: a UNIFORM storm inflates all 5 runs together
-        (low spread), so when the calibration pair trips, entries
-        that regressed past the 1.25 band vs the prior snapshot are
-        repassed even though 1.25 < the quiet-sweep 1.5 threshold;
-        tier labels record which gate(s) fired."""
-        bench = self._bench_module()
-        tiers = bench.storm_repass_tiers(
-            {"uniform": 1.40, "both_gates": 2.0, "ok": 1.0},
-            {"uniform": 0.05, "both_gates": 0.9, "ok": 0.01},
-            [(0.25, 0.40)],  # calibration tripped
-            prior_mins={"uniform": 1.0, "both_gates": 1.0, "ok": 0.99},
-            changed=frozenset(),
-        )
-        assert tiers == {"uniform": "drift", "both_gates": "spread+drift"}
-        assert bench.storm_repass_entries(
-            {"uniform": 1.40, "both_gates": 2.0, "ok": 1.0},
-            {"uniform": 0.05, "both_gates": 0.9, "ok": 0.01},
-            [(0.25, 0.40)],
-            prior_mins={"uniform": 1.0, "both_gates": 1.0, "ok": 0.99},
-            changed=frozenset(),
-        ) == ["both_gates", "uniform"]
-
-    def test_drift_tier_excludes_changed_fingerprints_and_bad_priors(self):
-        """A changed-fingerprint entry 3× over prior is a CODE effect
-        candidate — it must survive into the record and flag in the
-        comparator, not be min-washed by a repass.  Missing/zero
-        priors and entries absent from the prior snapshot are
-        skipped; no prior_mins at all degrades to the spread tier
-        (pinning that the r16 call signature is behavior-identical)."""
-        bench = self._bench_module()
-        tiers = bench.storm_repass_tiers(
-            {"edited": 3.0, "new_entry": 3.0, "zero_prior": 3.0},
-            {"edited": 0.0, "new_entry": 0.0, "zero_prior": 0.0},
-            [(0.25, 0.26)],
-            prior_mins={"edited": 1.0, "zero_prior": 0.0},
-            changed=frozenset({"edited"}),
-        )
-        assert tiers == {}
-        assert bench.storm_repass_entries(
-            {"q": 9.9}, {"q": 0.0}, [(0.25, 0.26)]
-        ) == []
-
-    def test_drift_tier_inputs_guards(self, tmp_path):
-        """bench._drift_tier_inputs degrades to (None, frozenset(),
-        None) on every bad input — missing FRESHNESS, corrupt JSON,
-        missing prior snapshot, SF mismatch — instead of crashing the
-        sweep or mis-selecting cross-SF."""
-        import json
-
-        bench = self._bench_module()
-        # missing FRESHNESS.json entirely
-        assert bench._drift_tier_inputs(0.1, repo=str(tmp_path)) == (
-            None, frozenset(), None,
-        )
-        # corrupt FRESHNESS.json (mid-write truncation)
-        (tmp_path / "FRESHNESS.json").write_text('{"latest_round": 7')
-        assert bench._drift_tier_inputs(0.1, repo=str(tmp_path))[0] is None
-        # valid FRESHNESS but no matching prior snapshot on disk
-        (tmp_path / "FRESHNESS.json").write_text(
-            json.dumps({"latest_round": 7, "fingerprints": {}})
-        )
-        assert bench._drift_tier_inputs(0.1, repo=str(tmp_path))[0] is None
-        # snapshot exists but at a different SF (auxiliary sweep)
-        (tmp_path / "BENCH_DETAIL_r7.json").write_text(
-            json.dumps({"sf": 0.001, "min": {"q": 1.0}})
-        )
-        assert bench._drift_tier_inputs(0.1, repo=str(tmp_path))[0] is None
-        # matching SF: priors + round come back; every live entry
-        # whose fingerprint is absent from the (empty) record counts
-        # as changed — new entries never drift-repass
-        prior_mins, changed, rnd = bench._drift_tier_inputs(
-            0.001, repo=str(tmp_path)
-        )
-        assert prior_mins == {"q": 1.0} and rnd == 7
-        from exosql_spark import catalog as _catalog
-
-        live = _catalog.current_fingerprints(_catalog.all_queries())
-        assert changed == frozenset(live)
 
 
 class TestPlanNormdiff:

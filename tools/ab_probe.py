@@ -1,49 +1,55 @@
 #!/usr/bin/env python
-"""Single-shot A/B probe: run the named catalog queries from whichever
-repo root is first on sys.path (caller sets PYTHONPATH to HEAD or a
-worktree), warmup + min-of-N each, print ONE JSON line.
+"""A/B probe: time the named catalog entries exactly as bench.py does
+(one warm pass, then interleaved timed passes through
+``bench.time_run``) and print ONE JSON line
+``{name: {"min": s, "median": s, "jobs": n}}``.
 
-Process-level interleaving is the only honest A/B on this box: two
-code versions can't share a SparkSession, and the r7→r8 drift episode
-(SCALE.md "environment drift") showed single-process sequencing is
-confounded by arrival-time CPU-steal storms.  The driver script runs
-HEAD and the snapshot worktree ALTERNATELY several times and takes the
-min over iterations per side, which cancels slow-varying box drift.
+bench.py is loaded by path from this file's own checkout, while
+``exosql_spark`` comes from PYTHONPATH — so an older commit's catalog
+is timed with today's harness.  Process-level interleaving is the only
+honest A/B on a VM with CPU-steal drift: two code versions can't share
+a SparkSession, so run the two sides ALTERNATELY several times and
+take the min over iterations per side.
 
 Usage: PYTHONPATH=/path/to/repo python tools/ab_probe.py q1 q2 ...
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_RUNS (as for bench.py).
 """
+import importlib.util
 import json
 import os
+import statistics
 import sys
-import time
 
-from exosql_spark.cache import release_caches
 from exosql_spark.catalog import all_queries
 from exosql_spark.session import get_spark
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
+
+def _bench():
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py"
+    )
+    spec = importlib.util.spec_from_file_location("_probe_bench", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 def main(names):
-    spark = get_spark(
-        app_name="ab_probe",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    bench = _bench()
+    spark = get_spark(app_name="ab_probe", extra_conf=bench.SESSION_CONF)
     qs = all_queries()
-    out = {}
-    for name in names:
-        fn = qs[name].fn
-        release_caches(spark)
-        fn(spark, SF_DIR).count()  # warmup
-        times = []
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).count()
-            times.append(time.perf_counter() - t0)
-        out[name] = round(min(times), 3)
-    release_caches(spark)
+    entries = {name: qs[name] for name in names}
+    bench.warm_pass(spark, entries, bench.SF_DIR)
+    samples, jobs = bench.timed_passes(spark, entries, bench.SF_DIR, bench.RUNS)
     spark.stop()
+    out = {
+        name: {
+            "min": round(min(t), 3),
+            "median": round(statistics.median(t), 3),
+            "jobs": jobs[name],
+        }
+        for name, t in samples.items()
+    }
     sys.stdout.flush()
     print(json.dumps(out, separators=(",", ":")))
 

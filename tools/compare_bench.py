@@ -99,50 +99,7 @@ def _from_detail(detail: dict) -> dict:
         "n_queries": detail.get("n_queries"),
         "query_set_sha1": detail.get("query_set_sha1"),
         "sf": detail.get("sf"),
-        "repass_calibration_sec": detail.get("repass_calibration_sec"),
-        "repass_calibration_sec_end": detail.get("repass_calibration_sec_end"),
-        "repass_calibration_shuffle_sec": detail.get(
-            "repass_calibration_shuffle_sec"
-        ),
-        "repass_calibration_shuffle_sec_end": detail.get(
-            "repass_calibration_shuffle_sec_end"
-        ),
     }
-
-
-def _detail_matching(path: str, rec: dict) -> dict | None:
-    """The detail record that actually describes ``rec``'s sweep,
-    verified by query_set_sha1: the per-round snapshot first, then
-    the live BENCH_DETAIL.json (artifact dir, then repo root) — the
-    same fallback chain _plan_shuffles uses, which matters for a
-    FRESH artifact whose name doesn't match BENCH_r{N}.json and so
-    has no snapshot yet.  The sha guard rejects a stale snapshot
-    (re-run artifact, old detail) instead of attributing the wrong
-    sweep's provenance."""
-    sha = rec.get("query_set_sha1")
-    cands = []
-    d = _detail_for(path)
-    if d is not None:
-        cands.append(d)
-    for cand in (
-        os.path.join(os.path.dirname(os.path.abspath(path)), "BENCH_DETAIL.json"),
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "BENCH_DETAIL.json",
-        ),
-    ):
-        # same degradation as _detail_for: skip unreadable candidates
-        # so a mid-write BENCH_DETAIL.json costs only the provenance
-        # note, never the comparison (ADVICE r17)
-        try:
-            with open(cand) as f:
-                cands.append(json.load(f))
-        except (OSError, json.JSONDecodeError):
-            continue
-    for d in cands:
-        if sha and d.get("query_set_sha1") == sha:
-            return d
-    return None
 
 
 def _load(path: str) -> dict:
@@ -257,14 +214,7 @@ def main() -> None:
     # 21% slowdown (ratio 0.79) trip the ">25%" warning — use
     # max(r, 1/r) > 1.25 so both directions get the same threshold.
     for side, rec in (("old", old), ("new", new)):
-        for base in (
-            "calibration_sec",
-            "calibration_shuffle_sec",
-            # present only when that sweep ran a storm-repass —
-            # bounds the SECOND pass's own window (r17)
-            "repass_calibration_sec",
-            "repass_calibration_shuffle_sec",
-        ):
+        for base in ("calibration_sec", "calibration_shuffle_sec"):
             start, end = rec.get(base), rec.get(base + "_end")
             if start and end and max(end / start, start / end) > 1.25:
                 print(
@@ -273,47 +223,6 @@ def main() -> None:
                     f"{end / start:.2f}) - intra-sweep steal storm; "
                     f"treat {side}-side normalizations as suspect"
                 )
-    # Storm-repass provenance (r17): when bench detected intra-sweep
-    # drift it re-measured high-spread entries on the settled box and
-    # recorded min-over-both-passes — say so, so a reader of this
-    # comparison knows which mins carry second-pass provenance.
-    for side, path, rec in (
-        ("old", sys.argv[1], old),
-        ("new", sys.argv[2], new),
-    ):
-        det = _detail_matching(path, rec)
-        if det and det.get("second_pass"):
-            won = sorted(
-                n
-                for n, p in (det.get("measurement_pass") or {}).items()
-                if p == 2
-            )
-            tiers = det.get("repass_tier") or {}
-            tier_note = ""
-            if tiers:
-                # r18: say WHICH gate selected the repassed entries —
-                # a drift-tier selection means the entry's level moved
-                # vs the prior round's record (BENCH_DETAIL_r{N}) with
-                # unchanged code, so a reader should expect its flag
-                # here to be environmental ("spread+drift" entries
-                # count in both gates)
-                n_spread = sum(1 for t in tiers.values() if "spread" in t)
-                n_drift = sum(1 for t in tiers.values() if "drift" in t)
-                drift_vs = (
-                    f" vs r{det['drift_prior_round']} record"
-                    if n_drift and det.get("drift_prior_round")
-                    else ""
-                )
-                tier_note = (
-                    f" ({n_spread} spread-gated, "
-                    f"{n_drift} drift-gated{drift_vs})"
-                )
-            print(
-                f"note: {side} sweep storm-repassed "
-                f"{len(det['second_pass'])} entries{tier_note}; "
-                f"{len(won)} recorded min(s) came from the settled "
-                f"second pass" + (f": {', '.join(won)}" if won else "")
-            )
     shuffles = _plan_shuffles(sys.argv[2])
     if not shuffles:
         print("no plan_shuffles map found - 'sel' column defaults to norm_shf")
