@@ -24,6 +24,10 @@ The contract here:
   keeps at most one small Python/py4j handle per operator invocation
   on the driver (the executor-side blocks were always LRU-bounded);
   the registry itself is what release_caches drains;
+- loop-owned frames (a driver loop's persisted edge tables) are not
+  registered: ``operators.iterative.loop_scope`` unpersists them when
+  the loop exits, exception path included.  A persisted frame an
+  operator hands to its caller is always registered here;
 - releasing is always SAFE, never required for correctness: an
   unpersisted frame that some still-live plan re-reads is simply
   recomputed (results identical, barrier benefit lost for that rerun).
@@ -47,8 +51,10 @@ def _registry(spark: SparkSession) -> list[DataFrame]:
 
 def managed_persist(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
     """``df.persist(level)`` + register the handle for
-    :func:`release_caches`. Returns the same DataFrame."""
-    df = df.persist(level) if level is not None else df.persist()
+    :func:`release_caches`; a frame that is already persisted is only
+    registered. Returns the same DataFrame."""
+    if not df.is_cached:
+        df = df.persist(level) if level is not None else df.persist()
     _registry(df.sparkSession).append(df)
     return df
 

@@ -172,18 +172,24 @@ def learn_bpe(
     Ties break on (left, right) ascending — deterministic across
     engines, runs, and partitionings.
 
-    Merges 2..k run under the iteration scope of
-    ``operators.iterative`` (r19): the first pair-count job counts the
-    exploded pair instances for free via ``observe``, and the
-    remaining fixed-shape merge rounds run with AQE off and a
-    size-derived shuffle partition count (measured at sf0.1:
-    16 → 6 jobs, 0.85× for the 8-merge bench entry — each tiny
-    per-merge argmax was paying AQE stage-jobs and a full task wave)."""
+    The returned frame, when any merge was learned, is persisted and
+    registered through ``cache.managed_persist`` (released by the
+    host's ``release_caches``); intermediate generations are
+    unpersisted as soon as their successor is materialized.
+
+    Merges 2..k run under ``operators.iterative.loop_scope`` (r19):
+    the first pair-count job counts the exploded pair instances for
+    free via ``observe``, and the remaining fixed-shape merge rounds
+    run with AQE off and a size-derived shuffle partition count
+    (measured at sf0.1: 16 → 6 jobs, 0.85× for the 8-merge bench entry
+    — each tiny per-merge argmax was paying AQE stage-jobs and a full
+    task wave)."""
     from contextlib import ExitStack
 
     from pyspark.sql import Observation
 
-    from exosql_spark.operators.iterative import loop_conf, loop_partitions
+    from exosql_spark.cache import managed_persist
+    from exosql_spark.operators.iterative import loop_scope
 
     spark = df.sparkSession
     merges: list[tuple[str, str, int]] = []
@@ -205,8 +211,7 @@ def learn_bpe(
                 .collect()
             )
             if it == 0:
-                p_loop, _ = loop_partitions(spark, int(obs.get["np"] or 0))
-                scope.enter_context(loop_conf(spark, p_loop))
+                scope.enter_context(loop_scope(spark, int(obs.get["np"] or 0)))
             if pending_unpersist is not None:
                 pending_unpersist.unpersist()
                 pending_unpersist = None
@@ -232,4 +237,8 @@ def learn_bpe(
             # corpus)
             df.count()
             pending_unpersist.unpersist()
+    if merges:
+        # the generation handed to the caller is theirs to read: it
+        # joins the session registry, so release_caches drains it
+        df = managed_persist(df)
     return merges, df

@@ -55,7 +55,7 @@ def connected_components(
     before a job runs."""
     from pyspark.sql import Observation
 
-    from exosql_spark.operators.iterative import loop_conf, loop_partitions
+    from exosql_spark.operators.iterative import loop_scope
 
     dtypes = dict(edges.dtypes)
     for c in (src, dst):
@@ -95,10 +95,8 @@ def connected_components(
     prev_sum = obs0.get["s"]
     nv = int(obs0.get["nv"] or 0)
     n2e = int(obs_e.get["n2e"] or 0)
-    spark = edges.sparkSession
-    p_loop, _ = loop_partitions(spark, max(nv, n2e))
     rounds = 0
-    with loop_conf(spark, p_loop):
+    with loop_scope(edges.sparkSession, max(nv, n2e)):
         while max_iterations is None or rounds < max_iterations:
             rounds += 1
             # candidate labels arriving over edges
@@ -175,7 +173,7 @@ def connected_components_star(
     fixpoint (the graph has collapsed into depth-1 stars)."""
     from pyspark.sql import Observation
 
-    from exosql_spark.operators.iterative import loop_conf, loop_partitions
+    from exosql_spark.operators.iterative import loop_scope
 
     obs_n = Observation("ccs_nodes")
     nodes = (
@@ -193,13 +191,11 @@ def connected_components_star(
     )
     nv = int(obs_n.get["nv"] or 0)
     ne = int(obs_e.get["ne"] or 0)
-    spark = edges.sparkSession
-    # r19 iteration scope (see operators.iterative); the star rounds'
-    # set-equality convergence check stays — edge-set equality is not
-    # expressible as a monotone scalar the way min-label sums are
-    p_loop, _ = loop_partitions(spark, max(nv, ne))
+    # the star rounds' set-equality convergence check stays — edge-set
+    # equality is not expressible as a monotone scalar the way
+    # min-label sums are
     converged = False
-    with loop_conf(spark, p_loop):
+    with loop_scope(edges.sparkSession, max(nv, ne)):
         for _ in range(max_iterations):
             out = _star_round(
                 _symmetrize(_star_round(_symmetrize(e), True)), False

@@ -34,6 +34,13 @@ the only driver scalar is N, one number):
   ``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()`` if
   executor loss must be survivable mid-computation.
 
+Every loop here (pagerank, trustrank, hits, kcore) runs inside
+``iterative.loop_scope``, which sizes the loop's shuffle partitions
+from the measured graph, re-lays the persisted edge frames out once
+when that size is far below the session ceiling, and unpersists them
+on exit.  trustrank runs pagerank's loop (``_rank_loop``) with its own
+teleport and dangling terms.
+
 Determinism: the per-vertex contribution sum is a float sum whose
 grouping order is partition-dependent (last-ulp), so oracles compare
 nd-rounded ranks — the repo-wide fround convention.
@@ -46,14 +53,7 @@ from pyspark.sql import functions as F
 
 from exosql_spark.cache import managed_persist
 
-# The loop-scope helpers live in operators.iterative (r19; shared with
-# bpe.learn_bpe).  Private aliases keep this module's call sites and
-# the pinned tests stable.
-from exosql_spark.operators.iterative import (  # noqa: E402
-    LOOP_ROWS_PER_TASK as _LOOP_ROWS_PER_TASK,
-    loop_conf as _loop_conf,
-    loop_partitions as _loop_partitions,
-)
+from exosql_spark.operators.iterative import loop_scope
 
 
 def pagerank(
@@ -75,10 +75,10 @@ def pagerank(
     multiplicity), the usual multigraph convention.
 
     ``tol`` enables convergence early-stop: iteration ends once
-    ``max_v |rank_v - prev_rank_v| < tol`` — one extra 1-row aggregate
-    + driver scalar per iteration (the same bounded-collect budget as
-    bpe.learn_bpe's per-merge argmax), worth it when n_iter is a
-    generous cap and the graph mixes fast.  Entries that need
+    ``max_v |rank_v - prev_rank_v| < tol`` — observed on each
+    generation's own checkpoint job (no extra job; one driver scalar
+    per iteration), worth it when n_iter is a generous cap and the
+    graph mixes fast.  Entries that need
     engine-reproducible output use a FIXED n_iter and no tol (the
     stopping iteration is float-comparison-dependent and therefore
     not oracle-stable).
@@ -128,7 +128,7 @@ def pagerank(
     # out-strength: Σ weights per source (== out-degree when
     # unweighted, since every _w is 1.0); ``_dc`` counts the rows so
     # Σ_dc == |E| rides the init observation for free — the loop's
-    # partition sizing (r19, _loop_conf) needs the edge count and this
+    # partition sizing (loop_scope) needs the edge count and this
     # aggregation already scans every edge exactly once
     out_deg = e.groupBy(F.col("_s").alias("id")).agg(
         F.sum("_w").alias("_deg"),
@@ -160,73 +160,72 @@ def pagerank(
     )
     verts.unpersist()
 
-    teleport = (1.0 - damping) / n
     has_dangling = (obs_d.get["nd"] or 0) > 0
     ne = int(obs_d.get["ne"] or 0)
-    spark = edges.sparkSession
-    # r19 (guide §2.2): the loop's exchanges move O(|V|)-bounded rank
-    # rows (map-side-combined contribution aggregation, |V|-row
-    # re-attach join), so its shuffle partition count should follow the
-    # MEASURED graph size, not the session ceiling — at the ceiling, a
-    # small graph pays a full task wave per exchange per iteration for
-    # rows that fit one task.  When the derived count is far below the
-    # edge frame's layout, ``e`` is re-laid-out ONCE from its cache (a
-    # bounded job over an already-small frame — the re-layout only
-    # triggers when the graph is small relative to the ceiling, so its
-    # cost is self-limiting; big graphs keep their layout and skip it).
-    p_loop, default_p = _loop_partitions(spark, max(n, ne))
-    with _loop_conf(spark, p_loop):
-        if p_loop * 2 <= default_p:
-            e2 = e.repartition(p_loop, "_s").persist()
-            e2.count()  # materialize from e's cache before dropping it
-            e.unpersist()
-            e = e2
-        for _ in range(n_iter):
-            prev_ranks = ranks
-            contrib = (
-                e.join(
-                    ranks.select(
-                        F.col("id").alias("_s"),
-                        (F.col("rank") / F.col("_deg")).alias("_c"),
-                    ),
-                    "_s",
-                )
-                .groupBy(F.col("_d").alias("id"))
-                .agg(F.sum(F.col("_c") * F.col("_w")).alias("_in"))
-            )
-            nxt = ranks.select("id", "_deg").join(contrib, "id", "left")
-            if has_dangling:
-                dangling = ranks.filter(F.col("_deg").isNull()).agg(
-                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-                )
-                new_rank = F.lit(teleport) + F.lit(damping) * (
-                    F.coalesce(F.col("_in"), F.lit(0.0)) + F.col("_dm") / n
-                )
-                nxt = nxt.crossJoin(F.broadcast(dangling))  # 1-row mass
-            else:
-                new_rank = F.lit(teleport) + F.lit(damping) * F.coalesce(
-                    F.col("_in"), F.lit(0.0)
-                )
-            ranks = nxt.select(
-                "id", "_deg", new_rank.alias("rank")
-            ).localCheckpoint(
-                # eager: truncates the 3-ref lineage
-            )
-            if tol is not None:
-                delta = (
-                    ranks.select("id", "rank")
-                    .join(
-                        prev_ranks.select("id", F.col("rank").alias("_pr")),
-                        "id",
-                    )
-                    .agg(F.max(F.abs(F.col("rank") - F.col("_pr"))).alias("d"))
-                    .first()
-                    .d
-                )
-                if delta is not None and delta < tol:
-                    break
-    e.unpersist()
+    # the loop's exchanges move O(|V|)-bounded rank rows, so loop_scope
+    # sizes its partitions from the measured graph, not the session
+    # ceiling, and re-lays ``e`` out once when the graph is small
+    with loop_scope(edges.sparkSession, max(n, ne), (e, "_s")) as (e,):
+        ranks = _rank_loop(
+            e,
+            ranks,
+            n_iter,
+            damping,
+            teleport=F.lit((1.0 - damping) / n),
+            dangling_share=F.col("_dm") / n if has_dangling else None,
+            tol=tol,
+        )
     return ranks.select("id", "rank")
+
+
+def _rank_loop(e, ranks, n_iter, damping, teleport, dangling_share, tol=None):
+    """pagerank's loop, which trustrank runs too: up to ``n_iter``
+    steps ``rank ← teleport + d·(Σ_in rank·_w/_deg + dangling_share)``
+    over the persisted ``(_s, _d, _w)`` edge frame, from the
+    checkpointed generation ``ranks`` (``id``, ``_deg``, caller
+    columns, ``rank``).  ``dangling_share`` reads the 1-row dangling
+    mass ``_dm``; it is None when no vertex is dangling (the mass is
+    then 0.0 every iteration, so dropping the term is bit-identical).
+    For ``tol`` the previous rank rides the generation as ``_pr`` and
+    the delta is observed on the generation's checkpoint job."""
+    from pyspark.sql import Observation
+
+    keep = [c for c in ranks.columns if c != "rank"]
+    for i in range(n_iter):
+        contrib = (
+            e.join(
+                ranks.select(
+                    F.col("id").alias("_s"),
+                    (F.col("rank") / F.col("_deg")).alias("_c"),
+                ),
+                "_s",
+            )
+            .groupBy(F.col("_d").alias("id"))
+            .agg(F.sum(F.col("_c") * F.col("_w")).alias("_in"))
+        )
+        nxt = ranks.select(*keep, F.col("rank").alias("_pr")).join(
+            contrib, "id", "left"
+        )
+        inflow = F.coalesce(F.col("_in"), F.lit(0.0))
+        if dangling_share is not None:
+            dangling = ranks.filter(F.col("_deg").isNull()).agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
+            )
+            nxt = nxt.crossJoin(F.broadcast(dangling))  # 1-row mass
+            inflow = inflow + dangling_share
+        nxt = nxt.select(
+            *keep, "_pr", (teleport + F.lit(damping) * inflow).alias("rank")
+        )
+        if tol is not None:
+            obs = Observation(f"rank_delta_{i}")
+            nxt = nxt.observe(
+                obs, F.max(F.abs(F.col("rank") - F.col("_pr"))).alias("d")
+            )
+        # eager: truncates the 3-ref lineage
+        ranks = nxt.select(*keep, "rank").localCheckpoint()
+        if tol is not None and obs.get["d"] < tol:
+            break
+    return ranks
 
 
 def triangles(
@@ -267,11 +266,11 @@ def _canonical_edges_deg(
     degrees."""
     # managed_persist, not a bare .persist(): the returned frames are
     # consumed by the CALLER's plan, so this function cannot unpersist
-    # before returning (unlike pagerank/hits, whose loops own their
-    # persists end-to-end).  Registering with the session cache registry
-    # lets bench.py / test sweeps drain them via release_caches between
-    # invocations instead of accumulating blocks until LRU eviction
-    # (ADVICE r14).
+    # before returning (a loop's own edge frames are released by
+    # iterative.loop_scope instead).  Registering with the session
+    # cache registry lets bench.py / test sweeps drain them via
+    # release_caches between invocations instead of accumulating blocks
+    # until LRU eviction (ADVICE r14).
     e = managed_persist(
         edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
         .where(F.col("_u") != F.col("_v"))
@@ -453,7 +452,7 @@ def hits(
     from pyspark.sql import Observation
 
     # endpoint union has exactly 2|E| rows — the edge count rides the
-    # vertex count's job for free (r19, _loop_conf partition sizing)
+    # vertex count's job for free (loop_scope's partition sizing)
     obs_e = Observation("hits_edges")
     verts = (
         e_src.select(F.col("_s").alias("id"))
@@ -475,24 +474,11 @@ def hits(
     ).localCheckpoint()
 
     ne = int(obs_e.get["n2e"] or 0) // 2
-    spark = edges.sparkSession
-    # r19: same size-derived loop scope as pagerank (see there); both
-    # persisted edge layouts are re-laid-out once when the graph is
-    # small relative to the session's partition ceiling
-    p_loop, default_p = _loop_partitions(spark, max(n, ne))
-    with _loop_conf(spark, p_loop):
-        if p_loop * 2 <= default_p:
-            es2 = e_src.repartition(p_loop, "_s").persist()
-            ed2 = e_dst.repartition(p_loop, "_d").persist()
-            es2.count()
-            ed2.count()  # materialize from the caches before dropping them
-            e_src.unpersist()
-            e_dst.unpersist()
-            e_src, e_dst = es2, ed2
-        scores = _hits_loop(e_src, e_dst, scores, n_iter)
-    e_src.unpersist()
-    e_dst.unpersist()
-    return scores
+    # same size-derived loop scope as pagerank, over both edge layouts
+    with loop_scope(
+        edges.sparkSession, max(n, ne), (e_src, "_s"), (e_dst, "_d")
+    ) as (e_src, e_dst):
+        return _hits_loop(e_src, e_dst, scores, n_iter)
 
 
 def _hits_loop(e_src, e_dst, scores, n_iter):
@@ -572,16 +558,22 @@ def trustrank(
     pins (an isolated component's rank is exactly 0.0, not merely
     small).  Ranks sum to 1 over the seed-reachable set.
 
-    Distributed shape per iteration: IDENTICAL to pagerank's — one
+    trustrank keeps only its own init (the seed teleport column ``_t``,
+    the dangling and size counts) and then runs pagerank's loop,
+    passing ``(1−d)·_t`` as the teleport term and ``_dm·_t`` as the
+    dangling share — so each iteration has pagerank's shape: one
     map-side-combined keyed aggregation for contributions against the
     once-partitioned persisted edge table, a 1-row dangling aggregate
     attached by broadcast crossJoin, localCheckpoint bounding the
-    3-reference lineage.  The teleport column ``_t`` rides the
-    |V|-sized rank frame (one extra double), so the seed set costs
-    nothing at any scale."""
+    3-reference lineage.  ``_t`` rides the |V|-sized rank frame (one
+    extra double), so the seed set costs nothing at any scale."""
     if n_iter < 0:
         raise ValueError(f"n_iter must be >= 0, got {n_iter}")
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+    # ``_w`` ≡ 1.0: pagerank's loop weighs contributions by it, and
+    # ``_c · 1.0 == _c`` bit-for-bit
+    e = edges.select(
+        F.col(src).alias("_s"), F.col(dst).alias("_d"), F.lit(1.0).alias("_w")
+    )
     e = e.repartition(F.col("_s")).persist()
     verts = (
         e.select(F.col("_s").alias("id"))
@@ -622,7 +614,7 @@ def trustrank(
             F.sum(F.when(F.col("_deg").isNull(), 1).otherwise(0)).alias("nd"),
             # Σ out-degree == |E| (``_deg`` IS a row count here) and the
             # row count == |V| — both ride the init checkpoint for free;
-            # the loop's partition sizing (r19, _loop_conf) needs them
+            # loop_scope's partition sizing needs them
             F.sum("_deg").alias("ne"),
             F.count(F.lit(1)).alias("nv"),
         )
@@ -631,47 +623,15 @@ def trustrank(
     has_dangling = (obs_d.get["nd"] or 0) > 0
     ne = int(obs_d.get["ne"] or 0)
     nv = int(obs_d.get["nv"] or 0)
-    spark = edges.sparkSession
-    # r19: same size-derived loop scope as pagerank (see there)
-    p_loop, default_p = _loop_partitions(spark, max(nv, ne))
-    with _loop_conf(spark, p_loop):
-        if p_loop * 2 <= default_p:
-            e2 = e.repartition(p_loop, "_s").persist()
-            e2.count()  # materialize from e's cache before dropping it
-            e.unpersist()
-            e = e2
-        for _ in range(n_iter):
-            contrib = (
-                e.join(
-                    ranks.select(
-                        F.col("id").alias("_s"),
-                        (F.col("rank") / F.col("_deg")).alias("_c"),
-                    ),
-                    "_s",
-                )
-                .groupBy(F.col("_d").alias("id"))
-                .agg(F.sum("_c").alias("_in"))
-            )
-            nxt = ranks.select("id", "_deg", "_t").join(contrib, "id", "left")
-            if has_dangling:
-                dangling = ranks.filter(F.col("_deg").isNull()).agg(
-                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-                )
-                nxt = nxt.crossJoin(F.broadcast(dangling))
-                new_rank = F.lit(1.0 - damping) * F.col("_t") + F.lit(
-                    damping
-                ) * (
-                    F.coalesce(F.col("_in"), F.lit(0.0))
-                    + F.col("_dm") * F.col("_t")
-                )
-            else:
-                new_rank = F.lit(1.0 - damping) * F.col("_t") + F.lit(
-                    damping
-                ) * F.coalesce(F.col("_in"), F.lit(0.0))
-            ranks = nxt.select(
-                "id", "_deg", "_t", new_rank.alias("rank")
-            ).localCheckpoint()
-    e.unpersist()
+    with loop_scope(edges.sparkSession, max(nv, ne), (e, "_s")) as (e,):
+        ranks = _rank_loop(
+            e,
+            ranks,
+            n_iter,
+            damping,
+            teleport=F.lit(1.0 - damping) * F.col("_t"),
+            dangling_share=F.col("_dm") * F.col("_t") if has_dangling else None,
+        )
     return ranks.select("id", "rank")
 
 
@@ -709,10 +669,10 @@ def kcore(
     neighbor once, up front), then the H-index reduces per vertex as
     ``max(min(c_rank, rank))`` over a per-vertex descending sort —
     window + final aggregate share one hash exchange on the vertex
-    key.  Convergence is a 1-row changed-count aggregate per
-    iteration (the same bounded driver-scalar budget as pagerank's
-    tol); generations are localCheckpoint-ed (each is referenced by
-    the join AND the convergence check — the PageRank lesson).
+    key.  Convergence is Σ c, observed on each generation's own
+    checkpoint job (one driver scalar per iteration, the pattern
+    pagerank's tol uses too); generations are localCheckpoint-ed (the
+    PageRank lesson).
     Iterations are bounded by the graph's degeneracy-ordering depth,
     small for real crawl graphs; ``max_iter`` is a backstop."""
     canon = (
@@ -747,8 +707,8 @@ def kcore(
         adj.groupBy("id")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         # Σ c == Σ deg == 2|E| (the convergence scalar) and the row
-        # count == |V| — the loop's partition sizing (r19, _loop_conf)
-        # reads both off the init job for free
+        # count == |V| — loop_scope's partition sizing reads both off
+        # the init job for free
         .observe(obs0, F.sum("c").alias("s"), F.count(F.lit(1)).alias("nv"))
         .localCheckpoint()
     )
@@ -757,17 +717,11 @@ def kcore(
     from pyspark.sql import Window
 
     w_desc = Window.partitionBy("id").orderBy(F.col("_cn").desc())
-    spark = edges.sparkSession
-    # r19: same size-derived loop scope as pagerank (see there); the
-    # per-iteration frames are the 2|E|-row neighbor expansion and the
-    # |V|-row c frame
-    p_loop, default_p = _loop_partitions(spark, max(nv, int(prev_sum or 0)))
-    with _loop_conf(spark, p_loop):
-        if p_loop * 2 <= default_p:
-            adj2 = adj.repartition(p_loop, "nb").persist()
-            adj2.count()  # materialize from adj's cache before dropping it
-            adj.unpersist()
-            adj = adj2
+    # same size-derived loop scope as pagerank; the per-iteration
+    # frames are the 2|E|-row neighbor expansion and the |V|-row c frame
+    with loop_scope(
+        edges.sparkSession, max(nv, int(prev_sum or 0)), (adj, "nb")
+    ) as (adj,):
         for i in range(max_iter):
             neigh = adj.join(
                 c.select(F.col("id").alias("nb"), F.col("c").alias("_cn")),
@@ -786,5 +740,4 @@ def kcore(
             if new_sum == prev_sum:
                 break
             prev_sum = new_sum
-    adj.unpersist()
     return c.select("id", F.col("c").cast("int").alias("coreness"))

@@ -51,6 +51,45 @@ class TestCacheHygiene:
         assert cache.live_count(spark) == 0
         assert _cache_mgr_empty(spark)
 
+    def test_loop_operators_release(self, spark):
+        """Every driver loop (pagerank, trustrank, hits, kcore, both
+        connected-components functions, learn_bpe) leaves the DataFrame
+        cache empty once the host calls release_caches: loop_scope
+        releases the loops' own edge frames (re-laid-out copies too, at
+        a ceiling of 16), and learn_bpe's returned generation is
+        registered."""
+        from exosql_spark.operators import bpe, components, graph
+
+        cache.release_caches(spark)
+        spark.catalog.clearCache()
+        assert _cache_mgr_empty(spark)
+
+        g = spark.createDataFrame(
+            [(i, (i + 1) % 6) for i in range(6)] + [(2, 6)],
+            "src long, dst long",
+        )
+        seeds = spark.createDataFrame([(0,)], "id long")
+        words = spark.createDataFrame(
+            [(list("banana"), 3), (list("bandana"), 2)],
+            "tokens array<string>, freq long",
+        )
+        default = spark.conf.get("spark.sql.shuffle.partitions")
+        try:
+            for ceiling in (default, "16"):
+                spark.conf.set("spark.sql.shuffle.partitions", ceiling)
+                graph.pagerank(g, n_iter=2).collect()
+                graph.trustrank(g, seeds, n_iter=2).collect()
+                graph.hits(g, n_iter=2).collect()
+                graph.kcore(g).collect()
+                components.connected_components(g, "src", "dst").collect()
+                components.connected_components_star(g, "src", "dst").collect()
+                bpe.learn_bpe(words, n_merges=2)[1].collect()
+                cache.release_caches(spark)
+                assert cache.live_count(spark) == 0
+                assert _cache_mgr_empty(spark), ceiling
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", default)
+
     def test_triangle_stats_drain_mode_scoped_release(self, spark):
         """triangle_stats(drain=True) — the long-lived-service mode —
         localCheckpoints its 1-row summary and releases exactly the

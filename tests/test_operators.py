@@ -3489,6 +3489,48 @@ class TestPageRank:
         empty = spark.createDataFrame([], "src long, dst long")
         assert pagerank(empty, n_iter=3).count() == 0
 
+    def test_tol_stops_where_the_old_rule_stops(self, spark):
+        """Old-vs-new for the tol path, whose delta now rides each
+        generation's checkpoint via ``observe`` instead of a separate
+        join job.  On a chain ending in a dangling sink (several
+        iterations to converge), ``tol`` must stop at the iteration a
+        plain-Python replay of the old rule picks — the first whose
+        max |rank − previous rank| is below tol — so the result equals
+        a fixed run of exactly that many iterations."""
+        from collections import defaultdict
+
+        from exosql_spark.operators.graph import pagerank
+
+        nodes = sorted({v for edge in _CHAIN_SINK for v in edge})
+        n, d = len(nodes), 0.85
+        deg = defaultdict(int)
+        for s, _ in _CHAIN_SINK:
+            deg[s] += 1
+        ranks, deltas, replayed = {v: 1.0 / n for v in nodes}, [], []
+        for _ in range(50):
+            dm = sum(r for v, r in ranks.items() if deg[v] == 0)
+            contrib = defaultdict(float)
+            for s, t in _CHAIN_SINK:
+                contrib[t] += ranks[s] / deg[s]
+            nxt = {v: (1 - d) / n + d * (contrib[v] + dm / n) for v in nodes}
+            deltas.append(max(abs(nxt[v] - ranks[v]) for v in nodes))
+            ranks = nxt
+            replayed.append(ranks)
+        k = next(i + 1 for i, dl in enumerate(deltas) if dl < _CHAIN_TOL)
+        assert k >= 4
+        # tol sits well away from every Δ up to the stop, so last-ulp
+        # float noise cannot move the stopping iteration
+        assert all(
+            dl > 2 * _CHAIN_TOL or dl < _CHAIN_TOL / 2 for dl in deltas[:k]
+        )
+
+        g = spark.createDataFrame(_CHAIN_SINK, "src long, dst long")
+        early = sorted(pagerank(g, n_iter=50, tol=_CHAIN_TOL).collect())
+        assert early == sorted(pagerank(g, n_iter=k).collect())
+        assert early != sorted(pagerank(g, n_iter=k - 1).collect())
+        for r in early:
+            assert abs(r.rank - replayed[k - 1][r.id]) < 1e-12
+
 
 class TestSnapshotDiff:
     def test_four_statuses(self, spark):
@@ -3822,37 +3864,67 @@ def test_pagerank_differential_vs_python_reference(spark):
 
 
 def test_graph_loop_conf_scope_and_sizing(spark):
-    """r19 loop scope: the derived partition count follows the
+    """iterative.loop_scope: the derived partition count follows the
     measured row bound (floor of a few tasks, ceiling at the session
-    conf), the iteration runs under AQE-off + the derived count, and
-    BOTH confs are restored afterwards — including when the loop body
-    raises."""
+    conf), the body runs under AQE-off + that count, BOTH confs are
+    restored afterwards — including when the body raises — and the
+    frames handed to the scope (the re-laid-out copies too) are no
+    longer cached after a raise."""
     import pytest
 
-    from exosql_spark.operators import graph
+    from exosql_spark.operators import graph, iterative
 
     default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
+
+    def scoped_partitions(n_rows):
+        with iterative.loop_scope(spark, n_rows):
+            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+            return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
     # tiny graph → floor; huge row bound → clamped at the ceiling
-    assert graph._loop_partitions(spark, 201)[0] == max(1, min(4, default))
-    big = default * graph._LOOP_ROWS_PER_TASK + 1
-    assert graph._loop_partitions(spark, big) == (default, default)
-    mid = 3 * graph._LOOP_ROWS_PER_TASK
-    assert graph._loop_partitions(spark, mid)[0] == max(
+    assert scoped_partitions(201) == max(1, min(4, default))
+    big = default * iterative.LOOP_ROWS_PER_TASK + 1
+    assert scoped_partitions(big) == default
+    mid = 3 * iterative.LOOP_ROWS_PER_TASK
+    assert scoped_partitions(mid) == max(
         1, min(default, max(3, min(4, default)))
     )
 
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    with graph._loop_conf(spark, 2):
+    with iterative.loop_conf(spark, 2):
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
         assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == default
 
     with pytest.raises(RuntimeError):
-        with graph._loop_conf(spark, 2):
+        with iterative.loop_conf(spark, 2):
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == default
+
+    def cached(df):
+        level = df.storageLevel
+        return level.useMemory or level.useDisk
+
+    # at 16 the scope re-lays the frame out (2·4 ≤ 16); both the input
+    # and its copy must be released when the body raises
+    try:
+        for ceiling in (default, 16):
+            spark.conf.set("spark.sql.shuffle.partitions", str(ceiling))
+            frame = spark.range(37).withColumn("v", F.col("id") * 7).persist()
+            frame.count()
+            inside = []
+            with pytest.raises(RuntimeError):
+                with iterative.loop_scope(spark, 37, (frame, "id")) as (f,):
+                    inside.append(f)
+                    assert cached(f)
+                    raise RuntimeError("boom")
+            assert not cached(frame) and not cached(inside[0])
+            assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
+            assert int(spark.conf.get("spark.sql.shuffle.partitions")) == ceiling
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(default))
 
     # an operator run leaves the session confs untouched end-to-end
     ring = spark.createDataFrame(
@@ -3862,6 +3934,100 @@ def test_graph_loop_conf_scope_and_sizing(spark):
     graph.kcore(ring, max_iter=2).collect()
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == default
+
+
+# Fixed small loop inputs: a ring with a chord and a tail into the
+# dangling sink 9, and a chain ending in a dangling sink whose PageRank
+# needs several iterations to meet _CHAIN_TOL.
+_RING_SINK = [(i, (i + 1) % 8) for i in range(8)] + [(0, 4), (3, 8), (8, 9)]
+_CHAIN_SINK = [(i, i + 1) for i in range(4)]
+_CHAIN_TOL = 0.02
+_BPE_WORDS = [("lowest", 5), ("lower", 2), ("newest", 6), ("widest", 3)]
+
+# Spark jobs per loop run on the inputs above: (loop_scope keeps the
+# edge layout, loop_scope re-lays the persisted edge frames out — one
+# job per keyed frame).  Measured on 4 cores at ceilings 4, 8 and 16.
+# pagerank_tol (6 iterations) ran 33/34 jobs before its delta moved
+# onto the generation's checkpoint job: one job per iteration fewer.
+_LOOP_JOBS = {
+    "pagerank": (18, 19),
+    "pagerank_tol": (27, 28),
+    "trustrank": (22, 23),
+    "hits": (29, 31),
+    "kcore": (10, 11),
+    "connected_components": (10, 10),
+    "connected_components_star": (20, 20),
+    "learn_bpe": (6, 6),
+}
+
+
+def _loop_run(spark, name):
+    """A zero-argument callable running loop ``name`` to a collected
+    result on its fixed input."""
+    from exosql_spark.operators import bpe, components, graph
+
+    g = spark.createDataFrame(_RING_SINK, "src long, dst long")
+    runs = {
+        "pagerank": lambda: graph.pagerank(g, n_iter=3),
+        "pagerank_tol": lambda: graph.pagerank(
+            spark.createDataFrame(_CHAIN_SINK, "src long, dst long"),
+            n_iter=50,
+            tol=_CHAIN_TOL,
+        ),
+        "trustrank": lambda: graph.trustrank(
+            g, spark.createDataFrame([(0,)], "id long"), n_iter=3
+        ),
+        "hits": lambda: graph.hits(g, n_iter=3),
+        "kcore": lambda: graph.kcore(g),
+        "connected_components": lambda: components.connected_components(
+            g, "src", "dst"
+        ),
+        "connected_components_star": (
+            lambda: components.connected_components_star(g, "src", "dst")
+        ),
+        "learn_bpe": lambda: bpe.learn_bpe(
+            spark.createDataFrame(
+                [(list(w), f) for w, f in _BPE_WORDS],
+                "tokens array<string>, freq long",
+            ),
+            n_merges=3,
+        )[1],
+    }
+    return lambda: runs[name]().collect()
+
+
+@pytest.mark.parametrize("name", sorted(_LOOP_JOBS))
+def test_loop_jobs_pinned(spark, name):
+    """Each driver loop's job count on a fixed small input is pinned at
+    the fixture's own shuffle-partition ceiling and at 16.  On these
+    inputs the loop's partition count is the floor min(4, ceiling), so
+    the re-layout runs exactly when 2·min(4, ceiling) ≤ ceiling — at
+    16 on every box."""
+    import uuid
+
+    from exosql_spark import cache
+
+    sc = spark.sparkContext
+    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    ceilings = (default, 16)
+    got = []
+    try:
+        for ceiling in ceilings:
+            spark.conf.set("spark.sql.shuffle.partitions", str(ceiling))
+            cache.release_caches(spark)
+            run = _loop_run(spark, name)
+            group = f"loop-jobs-{name}-{uuid.uuid4().hex[:8]}"
+            sc.setJobGroup(group, group)
+            try:
+                run()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            got.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(default))
+    kept, relaid = _LOOP_JOBS[name]
+    want = [relaid if 2 * min(4, c) <= c else kept for c in ceilings]
+    assert got == want, (name, ceilings, got, want)
 
 
 def test_pagerank_tol_early_stop(spark):
