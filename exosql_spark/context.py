@@ -25,8 +25,9 @@ entry whose files changed. ``env``, ``node``, ``http``, ``tables`` and
 callable specs resolve afresh for every new context.
 
 Each query binds temp views named ``db_table`` only for the tables it
-references (exosql's ``db.table`` is rewritten to ``db_table`` by a
-literal-masked identifier rewrite so the same queries run on Spark SQL).
+references (:mod:`exosql_spark.dialect` rewrites exosql's ``db.table``
+to ``db_table``, and every other dialect form, in one literal-masked
+pass, and reports the tables it rewrote).
 The names are shared by every context on the session, so a session-wide
 registry re-binds a view whenever it holds another context's frame and
 skips the bind when it already holds the right one.
@@ -52,12 +53,13 @@ instead of raising.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from exosql_spark.dialect import rewrite
 from exosql_spark.sources import resolve_source
 
 
@@ -140,38 +142,20 @@ class Context:
     # -- query path ---------------------------------------------------
 
     def _rewrite(self, sql: str) -> tuple[str, dict[str, DataFrame]]:
-        """Rewrite the exosql dialect to Spark SQL: ``db.table`` refs →
-        ``db_table`` views, ``$var`` → ``:var`` named parameters
-        (``$$`` → literal ``$``), plus the compat rewrites in
-        :mod:`exosql_spark.dialect` (strftime / jp / to_datetime
-        literal forms, DISTINCT ON desugar). String-literal content is
-        masked first so e.g. a query containing ``'visit db.events'``
-        or ``'price in $USD'`` is never rewritten inside the quotes.
-
-        Only databases actually referenced by the query get resolved,
-        and only the tables it references are bound as views. Returns
-        the Spark SQL and its ``{view name: DataFrame}`` bindings."""
-        from exosql_spark.dialect import mask_literals, unmask_literals
-        from exosql_spark.dialect import rewrite as dialect_rewrite
-
-        masked, lits = mask_literals(sql)
-        views: dict[str, DataFrame] = {}
-        for db in self._dbs.values():
-            if not re.search(rf"\b{re.escape(db.name)}\s*\.", masked):
-                continue
-            for t, df in self._resolve(db).items():
-                view = f"{db.name}_{t}"
-                masked, n = re.subn(
-                    rf"\b{re.escape(db.name)}\s*\.\s*{re.escape(t)}\b", view, masked
-                )
-                if n:
-                    views[view] = df
+        """Translate the exosql dialect to Spark SQL
+        (:func:`exosql_spark.dialect.rewrite` — ``db.table``, ``$var``
+        and the compat rewrites, in one literal-masked pass) and bind
+        the views it references.  The dialect asks for a database's
+        table names only when the query mentions it, so only referenced
+        databases get resolved, and only the tables the query
+        references are bound as ``db_table`` views. Returns the Spark
+        SQL and its ``{view name: DataFrame}`` bindings."""
+        rewritten, refs = rewrite(
+            sql, {name: partial(self._resolve, db) for name, db in self._dbs.items()}
+        )
+        views = {f"{db}_{t}": self.table(db, t) for db, t in refs}
         _bind_views(self.spark, views)
-        # $$ → literal $; $var → :var (named parameter marker)
-        masked = masked.replace("$$", "\x02")
-        masked = re.sub(r"\$([A-Za-z_][A-Za-z_0-9]*)", r":\1", masked)
-        masked = masked.replace("\x02", "$")
-        return dialect_rewrite(unmask_literals(masked, lits)), views
+        return rewritten, views
 
     def _run(self, rewritten: str, vars: dict[str, Any] | None, coerce: bool) -> DataFrame:
         if not coerce:

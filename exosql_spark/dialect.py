@@ -1,43 +1,50 @@
-"""exosql SQL-dialect compatibility rewrites.
+"""exosql SQL dialect → Spark SQL, in one literal-masked pass.
 
 The reference parses its own SQL dialect (leex/yecc grammar in
-``src/``); Spark SQL covers almost all of it natively, but a few forms
-need textual rewriting before ``spark.sql`` sees them:
+``src/``); Catalyst replaces that parser, and what remains of it is
+this textual rewrite.  :func:`rewrite` masks every string literal
+once, rewrites the masked text in order, then unmasks once:
 
-- ``db.table`` → registered view names (done in :mod:`context`).
-- ``$var`` → ``:var`` named parameters (done in :mod:`context`).
+- ``db.table`` → ``db_table`` view names, for the databases the query
+  mentions (a database's table names are asked for only then, so
+  resolution stays lazy).
+- ``$var`` → ``:var`` named parameters; ``$$`` escapes a literal ``$``.
 - ``strftime(x, '<c-pattern>')`` → ``date_format(x, '<java-pattern>')``
   (literal pattern translated at rewrite time — stays JVM-native,
-  no UDF).
+  no UDF; ``%s`` splices epoch seconds as the Column builder does).
 - ``jp(x, '/a/b/0')`` → ``get_json_object(x, '$.a.b[0]')``.
 - ``to_datetime(x)`` / ``to_datetime(x, '<duration>')`` → timestamp
   dispatch + interval arithmetic.
-- ``SELECT DISTINCT ON (keys) …`` (Postgres-style, used by the
-  reference — SURVEY.md §2.7 U3) → window ``row_number`` desugar,
-  at top level and inside any parenthesized subquery.
+- ``* EXCLUDE (cols)`` (DuckDB/Snowflake) → Spark's ``* EXCEPT (cols)``.
 - ``… QUALIFY <pred>`` (DuckDB/Snowflake/BigQuery window filter;
-  Spark has no QUALIFY) → subquery-with-flag desugar, same recursion.
+  Spark has no QUALIFY) → subquery-with-flag desugar, at top level and
+  inside any parenthesized subquery.
+- ``SELECT DISTINCT ON (keys) …`` (Postgres-style, used by the
+  reference — SURVEY.md §2.7 U3) → window ``row_number`` desugar, same
+  recursion.
 
-All rewrites are applied through a quote-aware scanner: content of
-string literals — single- or double-quoted (exosql accepts both),
-with doubled-quote and backslash escapes — is never rewritten, and
-function rewrites nest to arbitrary depth
-(``strftime(to_datetime(jp(js,'/t')), '%Y')`` resolves inside-out).
+Content of string literals — single- or double-quoted (exosql accepts
+both), with doubled-quote and backslash escapes — is never rewritten;
+literals a rewrite emits are registered as placeholders too.  Function
+rewrites nest to arbitrary depth (``strftime(to_datetime(jp(js,'/t')),
+'%Y')`` resolves inside-out).  A top-level ``WITH`` clause stays
+outside the QUALIFY / DISTINCT ON desugar of the main query; its CTE
+bodies are parenthesized levels of their own.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Mapping
 
-from exosql_spark.functions.datetime_compat import parse_duration, strftime_to_java
+from exosql_spark.functions.datetime_compat import parse_duration, strftime_pieces
 from exosql_spark.functions.json_compat import jp_to_jsonpath
 
 # --------------------------------------------------------------------
-# Quote-aware scanning primitives
+# Literal masking
 # --------------------------------------------------------------------
 
-_NAME_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
+_PLACEHOLDER_RE = re.compile(r"\x00(\d+)\x01")
 
 #: Characters that open a string literal. exosql's own dialect (and
 #: Spark SQL's default parser) accept BOTH single- and double-quoted
@@ -90,41 +97,51 @@ def mask_literals(sql: str) -> tuple[str, list[str]]:
 
 
 def unmask_literals(sql: str, lits: list[str]) -> str:
-    return re.sub(r"\x00(\d+)\x01", lambda m: lits[int(m.group(1))], sql)
+    return _PLACEHOLDER_RE.sub(lambda m: lits[int(m.group(1))], sql)
+
+
+def _emit(lits: list[str], value: str) -> str:
+    """Register ``value`` as a new single-quoted literal and return its
+    placeholder."""
+    lits.append("'" + value.replace("'", "''") + "'")
+    return f"\x00{len(lits) - 1}\x01"
+
+
+def _literal(arg: str, lits: list[str]) -> str | None:
+    """The python value of ``arg`` if it is a bare literal (either quote
+    style — exosql queries write both ``'%Y'`` and ``"%Y"``)."""
+    m = _PLACEHOLDER_RE.fullmatch(arg.strip())
+    if m is None:
+        return None
+    a = lits[int(m.group(1))]
+    q = a[0]
+    return a[1:-1].replace(q + q, q).replace("\\" + q, q)
+
+
+# --------------------------------------------------------------------
+# Scanning primitives (masked text only: no quotes left to skip)
+# --------------------------------------------------------------------
 
 
 def _matching_paren(sql: str, i: int) -> int | None:
-    """``sql[i]`` is ``(`` — index of its matching ``)``, quote-aware."""
+    """``sql[i]`` is ``(`` — index of its matching ``)``."""
     depth = 0
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c in _QUOTES:
-            i = _skip_literal(sql, i)
-            continue
-        if c == "(":
+    for j in range(i, len(sql)):
+        if sql[j] == "(":
             depth += 1
-        elif c == ")":
+        elif sql[j] == ")":
             depth -= 1
             if depth == 0:
-                return i
-        i += 1
+                return j
     return None
 
 
 def _split_args(body: str) -> list[str]:
-    """Split a call's argument text at top-level commas (quote/paren
-    aware)."""
+    """Split a call's argument text at top-level commas."""
     args: list[str] = []
     depth = 0
     start = 0
-    i = 0
-    n = len(body)
-    while i < n:
-        c = body[i]
-        if c in _QUOTES:
-            i = _skip_literal(body, i)
-            continue
+    for i, c in enumerate(body):
         if c == "(":
             depth += 1
         elif c == ")":
@@ -132,49 +149,67 @@ def _split_args(body: str) -> list[str]:
         elif c == "," and depth == 0:
             args.append(body[start:i].strip())
             start = i + 1
-        i += 1
     tail = body[start:].strip()
     if tail or args:
         args.append(tail)
     return args
 
 
-#: handler(args) → replacement SQL, or None to keep the call (with
-#: already-rewritten args) as-is.
-Handler = Callable[[list[str]], "str | None"]
+def _top_level(sql: str, keyword: str) -> list[re.Match]:
+    """Paren-depth-0 whole-word matches of ``keyword`` in ``sql``, in
+    order, case-insensitive; a multi-word keyword (``order by``)
+    matches across any whitespace run."""
+    pat = r"(?<!\w)" + r"\s+".join(keyword.split()) + r"(?!\w)"
+    return [
+        m
+        for m in re.finditer(pat, sql, re.IGNORECASE)
+        if sql.count("(", 0, m.start()) == sql.count(")", 0, m.start())
+    ]
 
 
-def _rewrite_calls(sql: str, handlers: dict[str, Handler]) -> str:
-    """Rewrite ``name(args…)`` calls for every name in ``handlers``,
-    left-to-right, skipping string literals, recursing into argument
-    lists first so nesting resolves inside-out at any depth."""
+def _split_last(sql: str, keyword: str) -> tuple[str, str | None]:
+    """Split off a trailing top-level clause (ORDER BY / LIMIT /
+    QUALIFY) — last occurrence wins."""
+    found = _top_level(sql, keyword)
+    if not found:
+        return sql, None
+    return sql[: found[-1].start()].rstrip(), sql[found[-1].end() :].strip()
+
+
+# --------------------------------------------------------------------
+# Function rewrites: strftime / jp / to_datetime
+# --------------------------------------------------------------------
+
+#: handler(args, lits) → replacement SQL, or None to keep the call (with
+#: already-rewritten args) as-is.  Literal arguments are read from, and
+#: emitted literals registered in, the placeholder list ``lits``.
+Handler = Callable[[list[str], list[str]], "str | None"]
+
+_NAME_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
+
+
+def _rewrite_calls(sql: str, lits: list[str]) -> str:
+    """Rewrite ``name(args…)`` calls for every name in ``_HANDLERS``,
+    left-to-right, recursing into argument lists first so nesting
+    resolves inside-out at any depth."""
     out: list[str] = []
     i = 0
     n = len(sql)
     while i < n:
-        c = sql[i]
-        if c in _QUOTES:
-            j = _skip_literal(sql, i)
-            out.append(sql[i:j])
-            i = j
-            continue
         m = _NAME_RE.match(sql, i)
         if not m:
-            out.append(c)
+            out.append(sql[i])
             i += 1
             continue
         name, j = m.group(0), m.end()
         k = j
         while k < n and sql[k].isspace():
             k += 1
-        if name.lower() in handlers and k < n and sql[k] == "(":
+        if name.lower() in _HANDLERS and k < n and sql[k] == "(":
             close = _matching_paren(sql, k)
             if close is not None:
-                args = [
-                    _rewrite_calls(a, handlers)
-                    for a in _split_args(sql[k + 1 : close])
-                ]
-                repl = handlers[name.lower()](args)
+                args = [_rewrite_calls(a, lits) for a in _split_args(sql[k + 1 : close])]
+                repl = _HANDLERS[name.lower()](args, lits)
                 if repl is None:
                     repl = f"{name}({', '.join(args)})"
                 out.append(repl)
@@ -185,32 +220,17 @@ def _rewrite_calls(sql: str, handlers: dict[str, Handler]) -> str:
     return "".join(out)
 
 
-# --------------------------------------------------------------------
-# Function rewrites: strftime / jp / to_datetime
-# --------------------------------------------------------------------
-
-
-def _literal(arg: str) -> str | None:
-    """The python value of ``arg`` if it is a bare quoted literal
-    (either quote style — exosql queries write both ``'%Y'`` and
-    ``"%Y"``)."""
-    a = arg.strip()
-    if len(a) >= 2 and a[0] in _QUOTES and _skip_literal(a, 0) == len(a):
-        q = a[0]
-        return a[1:-1].replace(q + q, q).replace("\\" + q, q)
-    return None
-
-
-def _duration_to_interval_sql(dur: str) -> str:
+def _duration_to_interval_sql(dur: str, lits: list[str]) -> str:
     u = parse_duration(dur)
-    parts = []
-    for unit, name in (
-        ("Y", "YEAR"), ("M", "MONTH"), ("w", "WEEK"), ("d", "DAY"),
-        ("h", "HOUR"), ("m", "MINUTE"), ("s", "SECOND"),
-    ):
-        if u[unit]:
-            parts.append(f"INTERVAL '{u[unit]}' {name}")
-    return " + ".join(parts) if parts else "INTERVAL '0' SECOND"
+    parts = [
+        f"INTERVAL {_emit(lits, str(u[unit]))} {name}"
+        for unit, name in (
+            ("Y", "YEAR"), ("M", "MONTH"), ("w", "WEEK"), ("d", "DAY"),
+            ("h", "HOUR"), ("m", "MINUTE"), ("s", "SECOND"),
+        )
+        if u[unit]
+    ]
+    return " + ".join(parts) if parts else f"INTERVAL {_emit(lits, '0')} SECOND"
 
 
 def _todt_base(arg: str) -> str:
@@ -223,37 +243,37 @@ def _todt_base(arg: str) -> str:
     )
 
 
-def _sq(s: str) -> str:
-    """Escape a string for splicing inside a SQL single-quoted literal
-    (Java patterns quote literal text with single quotes)."""
-    return s.replace("'", "''")
-
-
-def _h_strftime(args: list[str]) -> str | None:
+def _h_strftime(args: list[str], lits: list[str]) -> str | None:
     if len(args) != 2:
         return None
-    pat = _literal(args[1])
+    pat = _literal(args[1], lits)
     if pat is None:
         return None  # non-literal pattern: can't translate at rewrite time
-    return f"date_format({args[0]}, '{_sq(strftime_to_java(pat))}')"
+    parts = [
+        f"date_format({args[0]}, {_emit(lits, p)})"
+        if p is not None
+        else f"cast(unix_timestamp({args[0]}) AS string)"
+        for p in strftime_pieces(pat)
+    ]
+    return parts[0] if len(parts) == 1 else f"concat({', '.join(parts)})"
 
 
-def _h_jp(args: list[str]) -> str | None:
+def _h_jp(args: list[str], lits: list[str]) -> str | None:
     if len(args) != 2:
         return None
-    ptr = _literal(args[1])
+    ptr = _literal(args[1], lits)
     if ptr is None:
         return None
-    return f"get_json_object({args[0]}, '{_sq(jp_to_jsonpath(ptr))}')"
+    return f"get_json_object({args[0]}, {_emit(lits, jp_to_jsonpath(ptr))})"
 
 
-def _h_to_datetime(args: list[str]) -> str | None:
+def _h_to_datetime(args: list[str], lits: list[str]) -> str | None:
     if len(args) == 1:
         return f"({_todt_base(args[0])})"
     if len(args) == 2:
-        dur = _literal(args[1])
+        dur = _literal(args[1], lits)
         if dur is not None:
-            return f"({_todt_base(args[0])} + {_duration_to_interval_sql(dur)})"
+            return f"({_todt_base(args[0])} + {_duration_to_interval_sql(dur, lits)})"
     return None
 
 
@@ -264,241 +284,8 @@ _HANDLERS: dict[str, Handler] = {
 }
 
 
-def rewrite_functions(sql: str) -> str:
-    """Rewrite compat functions to native Spark SQL — any nesting depth,
-    string-literal content untouched."""
-    return _rewrite_calls(sql, _HANDLERS)
-
-
 # --------------------------------------------------------------------
-# DISTINCT ON desugar
-# --------------------------------------------------------------------
-
-_DISTINCT_ON_RE = re.compile(
-    r"^\s*SELECT\s+DISTINCT\s+ON\s*\(", re.IGNORECASE
-)
-
-
-def _split_top_level(sql: str, keyword: str) -> tuple[str, str | None]:
-    """Split off a trailing top-level clause (ORDER BY / LIMIT) —
-    paren-depth aware, last occurrence wins. Expects masked text (no
-    quote handling needed) with a multi-word keyword matched on any
-    whitespace run."""
-    kw_parts = keyword.lower().split()
-    depth = 0
-    pos = end = None
-    i = 0
-    n = len(sql)
-    low = sql.lower()
-    while i < n:
-        c = sql[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            # try to match the (possibly multi-word) keyword here
-            j = i
-            ok = True
-            for w, word in enumerate(kw_parts):
-                if w:
-                    if j >= n or not low[j].isspace():
-                        ok = False
-                        break
-                    while j < n and low[j].isspace():
-                        j += 1
-                if not low.startswith(word, j) or (
-                    j > 0 and (low[j - 1].isalnum() or low[j - 1] == "_")
-                ):
-                    ok = False
-                    break
-                j += len(word)
-                if j < n and (low[j].isalnum() or low[j] == "_"):
-                    ok = False
-                    break
-            if ok:
-                pos, end = i, j
-        i += 1
-    if pos is None:
-        return sql, None
-    return sql[:pos].rstrip(), sql[end:].strip()
-
-
-def _desugar_distinct_on(masked: str) -> str:
-    """``SELECT DISTINCT ON (keys) sel FROM rest [ORDER BY o] [LIMIT n]``
-    → row_number window pattern. ``masked`` has literals masked out.
-    A bare ``*`` select list projects ``* EXCEPT (__exo_rn)`` so the
-    helper column never leaks into the result schema."""
-    m = _DISTINCT_ON_RE.match(masked)
-    if not m:
-        return masked
-    close = _matching_paren(masked, m.end() - 1)
-    if close is None:
-        return masked
-    keys = masked[m.end() : close].strip()
-    body = masked[close + 1 :]
-    body, limit = _split_top_level(body, "limit")
-    body, order = _split_top_level(body, "order by")
-    # first top-level FROM (paren-depth aware, case-insensitive)
-    depth, from_pos = 0, None
-    low = body.lower()
-    for i, c in enumerate(body):
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and low.startswith("from", i)
-            and (i == 0 or not (body[i - 1].isalnum() or body[i - 1] == "_"))
-            and (i + 4 >= len(body) or not (body[i + 4].isalnum() or body[i + 4] == "_"))
-        ):
-            from_pos = i
-            break
-    if from_pos is None:
-        return masked  # can't parse — leave for Spark to error on
-    sel, rest = body[:from_pos].strip(), body[from_pos + 4 :]
-    if sel == "*":
-        sel = "* EXCEPT (__exo_rn)"
-    order_sql = order if order else keys
-    out = (
-        f"SELECT {sel} FROM ("
-        f"SELECT *, row_number() OVER (PARTITION BY {keys} ORDER BY {order_sql}) AS __exo_rn "
-        f"FROM {rest.strip()}"
-        f") WHERE __exo_rn = 1"
-    )
-    if order:
-        out += f" ORDER BY {order}"
-    if limit:
-        out += f" LIMIT {limit}"
-    return out
-
-
-def _rewrite_distinct_on_masked(masked: str) -> str:
-    """Recurse into parenthesized spans (subqueries) first, then desugar
-    this level if it is a DISTINCT ON select."""
-    out: list[str] = []
-    i = 0
-    n = len(masked)
-    while i < n:
-        if masked[i] == "(":
-            close = _matching_paren(masked, i)
-            if close is None:
-                out.append(masked[i:])
-                break
-            out.append("(" + _rewrite_distinct_on_masked(masked[i + 1 : close]) + ")")
-            i = close + 1
-        else:
-            out.append(masked[i])
-            i += 1
-    return _desugar_distinct_on("".join(out))
-
-
-def rewrite_distinct_on(sql: str) -> str:
-    """Desugar ``SELECT DISTINCT ON`` at top level and in any
-    parenthesized subquery (derived tables, CTE bodies, IN (...))."""
-    masked, lits = mask_literals(sql)
-    return unmask_literals(_rewrite_distinct_on_masked(masked), lits)
-
-
-# --------------------------------------------------------------------
-# QUALIFY desugar
-# --------------------------------------------------------------------
-
-
-def _desugar_qualify(masked: str) -> str:
-    """``SELECT sel FROM rest QUALIFY pred [ORDER BY o] [LIMIT n]`` →
-
-        SELECT * EXCEPT (__exo_q) FROM (
-          SELECT sel, (pred) AS __exo_q FROM rest
-        ) WHERE __exo_q [ORDER BY o] [LIMIT n]
-
-    The predicate is evaluated in the SAME select scope as the
-    original projection, so window functions in it see the query's
-    partitioning (Catalyst merges textually-identical window
-    expressions into one Window node — repeating the expression in
-    QUALIFY costs nothing).  Referencing a select alias inside the
-    predicate resolves through Spark's lateral column alias rules;
-    a self-contained window expression always works."""
-    body, limit = _split_top_level(masked, "limit")
-    body, order = _split_top_level(body, "order by")
-    body, qual = _split_top_level(body, "qualify")
-    if qual is None:
-        return masked
-    # ``qualify`` is a NON-reserved word: ``... WHERE qualify = 1``
-    # uses it as a column and must not desugar (ADVICE r12 — the
-    # token-only trigger rewrote such queries into malformed SQL).  A
-    # real QUALIFY clause is followed by a predicate EXPRESSION; a
-    # column usage is followed by an operator / RHS keyword or ends
-    # the statement.  Bare ``QUALIFY NOT pred`` still desugars, but
-    # ``NOT`` immediately followed by an RHS keyword (``qualify NOT IN
-    # (...)``, ``NOT LIKE ...``) is a negated predicate over a column
-    # named qualify, not a clause (ADVICE r13).
-    if not qual.strip() or re.match(
-        r"(?i)^(?:[=<>!+\-*/%|,)\]]|is\b|in\b|like\b|ilike\b"
-        r"|rlike\b|between\b|and\b|or\b|asc\b|desc\b"
-        r"|not\s+(?:in|like|ilike|rlike|between)\b)",
-        qual.strip(),
-    ):
-        return masked
-    # first top-level FROM (paren-depth aware, case-insensitive)
-    depth, from_pos = 0, None
-    low = body.lower()
-    for i, c in enumerate(body):
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and low.startswith("from", i)
-            and (i == 0 or not (body[i - 1].isalnum() or body[i - 1] == "_"))
-            and (i + 4 >= len(body) or not (body[i + 4].isalnum() or body[i + 4] == "_"))
-        ):
-            from_pos = i
-            break
-    if from_pos is None:
-        return masked  # can't parse — leave for Spark to error on
-    sel, rest = body[:from_pos].strip(), body[from_pos + 4 :]
-    out = (
-        f"SELECT * EXCEPT (__exo_q) FROM ("
-        f"{sel[:6]} {sel[6:].strip()}, ({qual}) AS __exo_q FROM {rest.strip()}"
-        f") WHERE __exo_q"
-    )
-    if order:
-        out += f" ORDER BY {order}"
-    if limit:
-        out += f" LIMIT {limit}"
-    return out
-
-
-def _rewrite_qualify_masked(masked: str) -> str:
-    out: list[str] = []
-    i = 0
-    n = len(masked)
-    while i < n:
-        if masked[i] == "(":
-            close = _matching_paren(masked, i)
-            if close is None:
-                out.append(masked[i:])
-                break
-            out.append("(" + _rewrite_qualify_masked(masked[i + 1 : close]) + ")")
-            i = close + 1
-        else:
-            out.append(masked[i])
-            i += 1
-    return _desugar_qualify("".join(out))
-
-
-def rewrite_qualify(sql: str) -> str:
-    """Desugar ``QUALIFY`` at top level and in any parenthesized
-    subquery."""
-    masked, lits = mask_literals(sql)
-    return unmask_literals(_rewrite_qualify_masked(masked), lits)
-
-
-# --------------------------------------------------------------------
-# star EXCLUDE desugar
+# star EXCLUDE / QUALIFY / DISTINCT ON desugars
 # --------------------------------------------------------------------
 
 # DuckDB/Snowflake spell column subtraction ``* EXCLUDE (c, ...)``;
@@ -513,13 +300,144 @@ _STAR_EXCLUDE_RE = re.compile(
     r"(?i)((?:\bselect\s+(?:distinct\s+|all\s+)?|,\s*|\w\.)\*\s*)exclude(\s*\()"
 )
 
+_WITH_RE = re.compile(r"\s*WITH\b", re.IGNORECASE)
+_DISTINCT_ON_RE = re.compile(r"^\s*SELECT\s+DISTINCT\s+ON\s*\(", re.IGNORECASE)
 
-def rewrite_star_exclude(sql: str) -> str:
-    masked, lits = mask_literals(sql)
-    return unmask_literals(_STAR_EXCLUDE_RE.sub(r"\1EXCEPT\2", masked), lits)
+# ``qualify`` is a NON-reserved word: ``... WHERE qualify = 1`` uses it
+# as a column and must not desugar (ADVICE r12 — the token-only trigger
+# rewrote such queries into malformed SQL).  A real QUALIFY clause is
+# followed by a predicate EXPRESSION; a column usage is followed by an
+# operator / RHS keyword or ends the statement.  Bare ``QUALIFY NOT
+# pred`` still desugars, but ``NOT`` immediately followed by an RHS
+# keyword (``qualify NOT IN (...)``, ``NOT LIKE ...``) is a negated
+# predicate over a column named qualify, not a clause (ADVICE r13).
+_QUALIFY_COLUMN_RE = re.compile(
+    r"(?i)^(?:[=<>!+\-*/%|,)\]]|is\b|in\b|like\b|ilike\b"
+    r"|rlike\b|between\b|and\b|or\b|asc\b|desc\b"
+    r"|not\s+(?:in|like|ilike|rlike|between)\b)"
+)
 
 
-def rewrite(sql: str) -> str:
-    return rewrite_distinct_on(
-        rewrite_qualify(rewrite_star_exclude(rewrite_functions(sql)))
+def _each_level(masked: str, desugar: Callable[[str], str]) -> str:
+    """Apply ``desugar`` to every parenthesized level of ``masked``,
+    innermost first, then to this level.  A leading ``WITH`` clause
+    stays outside: CTE bodies are parenthesized, so the first depth-0
+    ``SELECT`` starts the main query."""
+    out: list[str] = []
+    i = 0
+    while (j := masked.find("(", i)) != -1:
+        close = _matching_paren(masked, j)
+        if close is None:
+            break
+        out.append(masked[i : j + 1] + _each_level(masked[j + 1 : close], desugar) + ")")
+        i = close + 1
+    out.append(masked[i:])
+    level = "".join(out)
+    head = 0
+    if _WITH_RE.match(level):
+        selects = _top_level(level, "select")
+        head = selects[0].start() if selects else 0
+    return level[:head] + desugar(level[head:])
+
+
+def _with_order_limit(sql: str, order: str | None, limit: str | None) -> str:
+    if order:
+        sql += f" ORDER BY {order}"
+    if limit:
+        sql += f" LIMIT {limit}"
+    return sql
+
+
+def _desugar_qualify(q: str) -> str:
+    """``SELECT sel FROM rest QUALIFY pred [ORDER BY o] [LIMIT n]`` →
+
+        SELECT * EXCEPT (__exo_q) FROM (
+          SELECT sel, (pred) AS __exo_q FROM rest
+        ) WHERE __exo_q [ORDER BY o] [LIMIT n]
+
+    The predicate is evaluated in the SAME select scope as the
+    original projection, so window functions in it see the query's
+    partitioning (Catalyst merges textually-identical window
+    expressions into one Window node — repeating the expression in
+    QUALIFY costs nothing).  Referencing a select alias inside the
+    predicate resolves through Spark's lateral column alias rules;
+    a self-contained window expression always works."""
+    body, limit = _split_last(q, "limit")
+    body, order = _split_last(body, "order by")
+    body, qual = _split_last(body, "qualify")
+    if not qual or _QUALIFY_COLUMN_RE.match(qual):
+        return q
+    froms = _top_level(body, "from")
+    if not froms:
+        return q  # can't parse — leave for Spark to error on
+    sel, rest = body[: froms[0].start()].strip(), body[froms[0].end() :].strip()
+    return _with_order_limit(
+        f"SELECT * EXCEPT (__exo_q) FROM ("
+        f"{sel}, ({qual}) AS __exo_q FROM {rest}"
+        f") WHERE __exo_q",
+        order,
+        limit,
     )
+
+
+def _desugar_distinct_on(q: str) -> str:
+    """``SELECT DISTINCT ON (keys) sel FROM rest [ORDER BY o] [LIMIT n]``
+    → row_number window pattern.  A bare ``*`` select list projects
+    ``* EXCEPT (__exo_rn)`` so the helper column never leaks into the
+    result schema."""
+    m = _DISTINCT_ON_RE.match(q)
+    if not m:
+        return q
+    close = _matching_paren(q, m.end() - 1)
+    if close is None:
+        return q
+    keys = q[m.end() : close].strip()
+    body, limit = _split_last(q[close + 1 :], "limit")
+    body, order = _split_last(body, "order by")
+    froms = _top_level(body, "from")
+    if not froms:
+        return q  # can't parse — leave for Spark to error on
+    sel, rest = body[: froms[0].start()].strip(), body[froms[0].end() :].strip()
+    if sel == "*":
+        sel = "* EXCEPT (__exo_rn)"
+    return _with_order_limit(
+        f"SELECT {sel} FROM ("
+        f"SELECT *, row_number() OVER (PARTITION BY {keys} ORDER BY {order or keys}) AS __exo_rn "
+        f"FROM {rest}"
+        f") WHERE __exo_rn = 1",
+        order,
+        limit,
+    )
+
+
+# --------------------------------------------------------------------
+# The pass
+# --------------------------------------------------------------------
+
+
+def rewrite(
+    sql: str, databases: Mapping[str, Callable[[], Iterable[str]]] | None = None
+) -> tuple[str, list[tuple[str, str]]]:
+    """Translate exosql SQL to Spark SQL.  ``databases`` maps each
+    database name to a callable returning its table names, called only
+    when the query mentions ``name.``.  Returns the Spark SQL and the
+    ``(db, table)`` pairs it references (now spelled ``db_table``)."""
+    masked, lits = mask_literals(sql)
+    refs: list[tuple[str, str]] = []
+    for db, table_names in (databases or {}).items():
+        if not re.search(rf"\b{re.escape(db)}\s*\.", masked):
+            continue
+        for t in table_names():
+            masked, n = re.subn(
+                rf"\b{re.escape(db)}\s*\.\s*{re.escape(t)}\b", f"{db}_{t}", masked
+            )
+            if n:
+                refs.append((db, t))
+    # $$ → literal $; $var → :var (named parameter marker)
+    masked = masked.replace("$$", "\x02")
+    masked = re.sub(r"\$([A-Za-z_][A-Za-z_0-9]*)", r":\1", masked).replace("\x02", "$")
+    masked = _rewrite_calls(masked, lits)
+    masked = _STAR_EXCLUDE_RE.sub(r"\1EXCEPT\2", masked)
+    masked = _each_level(masked, _desugar_qualify)
+    masked = _each_level(masked, _desugar_distinct_on)
+    return unmask_literals(masked, lits), refs

@@ -67,7 +67,7 @@ def strftime_to_java(fmt: str) -> str:
             flush()
             out.append(_STRFTIME_MAP[tok])
             i += 2
-        elif tok == "%s":  # epoch seconds — handled by strftime() below
+        elif tok == "%s":  # epoch seconds — see strftime_pieces()
             flush()
             out.append("%s")
             i += 2
@@ -78,19 +78,32 @@ def strftime_to_java(fmt: str) -> str:
     return "".join(out)
 
 
+def strftime_pieces(fmt: str) -> list[str | None]:
+    """The Java patterns whose formatted values, concatenated, give
+    ``strftime(x, fmt)``; ``None`` stands for the epoch seconds of
+    ``%s``, which Java has no pattern letter for.  The one place the
+    ``%s`` splice is decided: the Column builder below and the SQL
+    dialect rewrite both build from these pieces."""
+    java = strftime_to_java(fmt)
+    if "%s" not in java:
+        return [java]
+    pieces: list[str | None] = []
+    for piece in java.split("%s"):
+        if piece:
+            pieces.append(piece)
+        pieces.append(None)
+    return pieces[:-1]
+
+
 def strftime(col: Column | str, fmt: str) -> Column:
     """``strftime(datetime, "%Y-%m-%d")`` → Column. ``%s`` (epoch
     seconds) is spliced via unix_timestamp since Java has no token."""
     c = F.col(col) if isinstance(col, str) else col
-    java = strftime_to_java(fmt)
-    if "%s" not in java:
-        return F.date_format(c, java)
-    parts: list[Column] = []
-    for piece in java.split("%s"):
-        if piece:
-            parts.append(F.date_format(c, piece))
-        parts.append(F.unix_timestamp(c).cast("string"))
-    return F.concat(*parts[:-1]) if parts else F.lit("")
+    parts = [
+        F.date_format(c, p) if p is not None else F.unix_timestamp(c).cast("string")
+        for p in strftime_pieces(fmt)
+    ]
+    return parts[0] if len(parts) == 1 else F.concat(*parts)
 
 
 _DURATION_RE = re.compile(r"^\s*([+-]?)\s*(\d+)\s*([YMwdhms])\s*$")

@@ -13,7 +13,7 @@ Scale design (the whole point at 100 TB):
   driver-side loops. The MinHash signature itself is an Arrow-batched
   numpy pandas-UDF: Spark's higher-order array functions evaluate
   interpreted (outside codegen), and the measured gap is ~6× (see
-  minhash_signature); a pure-Column variant is kept alongside.
+  minhash_signature).
 - Pairwise dedup here keeps the min-representative of each PAIR;
   true transitive clusters (A~B, B~C => {A,B,C}) are one call away in
   operators/components.py (iterative min-label propagation over the
@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from exosql_spark.cache import managed_persist_disk
 from pyspark.sql import types as T
 
-from exosql_spark.operators.text import normalize_text, tokens
+from exosql_spark.operators.text import normalize_text
 
 _SIZE_SUFFIX = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 
@@ -240,8 +240,8 @@ def minhash_signature(text_col: str, num_hashes: int = 64, k: int = 3) -> F.Colu
     The signature math (per-shingle base hash → ``(a_i·h + b_i) mod
     2^31-1`` → column-wise min) runs in numpy inside a pandas UDF.
     This is a *measured* exception to "prefer built-in Columns": the
-    pure-expression formulation (kept as :func:`minhash_signature_expr`)
-    lives in `aggregate`/`zip_with`/`transform`, which Spark evaluates
+    pure-expression formulation lives in
+    `aggregate`/`zip_with`/`transform`, which Spark evaluates
     interpreted — higher-order array functions never enter whole-stage
     codegen — and allocates two 64-long arrays per shingle per row.
     At sf0.1 (5k docs × ~50 shingles) the expression path takes 3.8s
@@ -284,44 +284,6 @@ def minhash_signature(text_col: str, num_hashes: int = 64, k: int = 3) -> F.Colu
 
     udf = F.pandas_udf(sig_batch, T.ArrayType(T.LongType()))
     return udf(F.col(text_col) if isinstance(text_col, str) else text_col)
-
-
-def minhash_signature_expr(text_col: str, num_hashes: int = 64, k: int = 3) -> F.Column:
-    """Pure-Column MinHash (no Python workers) — for SQL-only contexts.
-
-    Each shingle is string-hashed ONCE (xxhash64 → reduced mod 2^31-1),
-    then the num_hashes values derive as ``(a_i*h + b_i) mod 2^31-1``
-    — all inside signed-64 range (ANSI-safe: a,h < 2^31 ⇒ a*h+b < 2^62).
-
-    Written as ONE aggregate pass that references the shingle
-    expression exactly once — composing `array_min(transform(...))`
-    per hash would inline the (expensive) tokenize+shingle subtree
-    num_hashes times (Catalyst has no CSE across array elements).
-    Slower than :func:`minhash_signature` (interpreted HOF eval) but
-    has no Python-worker dependency."""
-    params = _uh_params(num_hashes)
-    m = F.lit(_MERSENNE31).cast("long")
-    # bind the per-shingle base hash as a lambda variable (evaluated
-    # once per element) — referencing an xxhash64 *expression* 64
-    # times inside the array would re-inline it 64× (no CSE)
-    base_hashes = F.transform(
-        shingles(text_col, k), lambda s: F.pmod(F.xxhash64(s), m)
-    )
-
-    def merge(acc: F.Column, h: F.Column) -> F.Column:
-        hashes = F.array(
-            *[
-                F.pmod(F.lit(a).cast("long") * h + F.lit(b).cast("long"), m)
-                for a, b in params
-            ]
-        )
-        return F.zip_with(acc, hashes, lambda x, y: F.least(x, y))
-
-    return F.aggregate(
-        base_hashes,
-        F.array_repeat(F.lit(_MAX_LONG).cast("long"), num_hashes),
-        merge,
-    )
 
 
 def signature_bands(sig: DataFrame, num_hashes: int = 64, bands: int = 16) -> DataFrame:
@@ -658,9 +620,9 @@ def simhash(text_col: str) -> F.Column:
 
     bit i of the result = sign of Σ_tokens (±1 by token-hash bit i).
     Same measured tradeoff as :func:`minhash_signature`: the
-    pure-Column formulation (kept as :func:`simhash_expr`) lives in
-    interpreted higher-order functions and allocates a 64-long array
-    per token per row — 6.4s vs well under 1s at sf0.1. numpy does
+    pure-Column formulation lives in interpreted higher-order
+    functions and allocates a 64-long array per token per row — 6.4s
+    vs well under 1s at sf0.1. numpy does
     the bit matrix in one broadcastified pass per document. Pure map:
     no shuffle, scales with the scan.
 
@@ -696,53 +658,6 @@ def simhash(text_col: str) -> F.Column:
 
     udf = F.pandas_udf(simhash_batch, T.LongType())
     return udf(F.col(text_col) if isinstance(text_col, str) else text_col)
-
-
-def simhash_expr(text_col: str) -> F.Column:
-    """Pure-Column 64-bit SimHash (no Python workers) — for SQL-only
-    contexts. One pass builds the per-token hash array; the 64
-    per-bit sign sums unfold statically into a single JVM expression
-    tree (shift amounts must be Python ints in Spark) — no explode, no
-    shuffle. Slower than :func:`simhash` (interpreted HOF eval)."""
-    toks = tokens(normalize_text(text_col))
-    # bind the token hash as a lambda variable (evaluated once per
-    # token) — the 64 bit probes below reference it 64×
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def merge(acc: F.Column, h: F.Column) -> F.Column:
-        contrib = F.array(
-            *[
-                F.when(
-                    F.shiftrightunsigned(h, i).bitwiseAND(F.lit(1).cast("long")) == 1,
-                    F.lit(1).cast("long"),
-                ).otherwise(F.lit(-1).cast("long"))
-                for i in range(_SIMHASH_BITS)
-            ]
-        )
-        return F.zip_with(acc, contrib, lambda a, c: a + c)
-
-    # one pass: the tokenize expression appears exactly once (see
-    # minhash_signature's CSE note)
-    sums = F.aggregate(
-        hashes, F.array_repeat(F.lit(0).cast("long"), _SIMHASH_BITS), merge
-    )
-    # fold sign bits: sum of distinct powers of two == bitwise OR
-    # (bit 63 is min-long; total stays in signed-64 range)
-    pow2 = F.array(
-        *[
-            F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long")
-            for i in range(_SIMHASH_BITS)
-        ]
-    )
-    return F.aggregate(
-        F.zip_with(
-            sums,
-            pow2,
-            lambda s, p: F.when(s > 0, p).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
 
 
 def hamming64(a: F.Column, b: F.Column) -> F.Column:

@@ -336,7 +336,7 @@ ORDER BY o_orderkey
 def dialect_star_exclude(spark, sf_dir):
     """``SELECT * EXCLUDE (cols)`` — DuckDB/Snowflake's column
     subtraction, desugared by the dialect layer to Spark's spelling
-    ``* EXCEPT (cols)`` (``dialect.rewrite_star_exclude``; rewritten
+    ``* EXCEPT (cols)`` (a step of ``dialect.rewrite``; rewritten
     only DIRECTLY after a star, so a column literally named exclude
     is untouched — same non-reserved-word discipline as the QUALIFY
     guard).  The oracle runs EXCLUDE natively in DuckDB, so the hash

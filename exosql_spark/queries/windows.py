@@ -203,8 +203,8 @@ def window_qualify(spark, sf_dir):
     """``QUALIFY`` (DuckDB/Snowflake/BigQuery window filter — Spark
     has no such clause): the SAME dialect text runs on both engines —
     DuckDB executes it natively as the oracle, Spark gets it through
-    the dialect desugar (``dialect.rewrite_qualify``: subquery with
-    the predicate as a boolean flag, evaluated in the original select
+    the dialect desugar (``dialect.rewrite``'s QUALIFY step: subquery
+    with the predicate as a boolean flag, evaluated in the original select
     scope so Catalyst merges the repeated window expression into ONE
     Window node — top-2 orders per customer costs exactly one hash
     exchange + one sort, same plan as writing the subquery by hand).

@@ -4,35 +4,40 @@ run verbatim must work through the federation API."""
 from __future__ import annotations
 
 from exosql_spark.context import Context
-from exosql_spark.dialect import rewrite, rewrite_distinct_on, rewrite_functions
+from exosql_spark.dialect import rewrite
+
+
+def spark_sql(sql: str) -> str:
+    """The Spark SQL text :func:`rewrite` makes of ``sql``."""
+    return rewrite(sql)[0]
 
 
 class TestRewriteUnits:
     def test_strftime_literal(self):
         assert (
-            rewrite_functions("SELECT strftime(ts, '%Y-%m-%d') FROM t")
+            spark_sql("SELECT strftime(ts, '%Y-%m-%d') FROM t")
             == "SELECT date_format(ts, 'yyyy-MM-dd') FROM t"
         )
 
     def test_jp_literal(self):
         assert (
-            rewrite_functions("SELECT jp(props, '/a/0/b') FROM t")
+            spark_sql("SELECT jp(props, '/a/0/b') FROM t")
             == "SELECT get_json_object(props, '$.a[0].b') FROM t"
         )
 
     def test_to_datetime_with_duration(self):
-        out = rewrite_functions("SELECT to_datetime(x, '-1d') FROM t")
+        out = spark_sql("SELECT to_datetime(x, '-1d') FROM t")
         assert "INTERVAL '-1' DAY" in out and "timestamp_seconds" in out
 
     def test_distinct_on_desugar(self):
-        out = rewrite_distinct_on(
+        out = spark_sql(
             "SELECT DISTINCT ON (k) k, v FROM t ORDER BY k, ts DESC"
         )
         assert "row_number() OVER (PARTITION BY k ORDER BY k, ts DESC)" in out
         assert "__exo_rn = 1" in out
 
     def test_distinct_on_with_limit(self):
-        out = rewrite_distinct_on(
+        out = spark_sql(
             "SELECT DISTINCT ON (k) k, v FROM t ORDER BY k, v LIMIT 5"
         )
         assert out.endswith("LIMIT 5")
@@ -40,24 +45,24 @@ class TestRewriteUnits:
     def test_strftime_quote_escaping(self):
         # Java patterns quote literals with single quotes — they must be
         # escaped for the SQL literal (regression: '%Y-%m-%dT%H' broke)
-        out = rewrite_functions("SELECT strftime(ts, '%Y-%m-%dT%H') FROM t")
+        out = spark_sql("SELECT strftime(ts, '%Y-%m-%dT%H') FROM t")
         assert "date_format(ts, 'yyyy-MM-dd''T''HH')" in out
 
     def test_plain_sql_untouched(self):
         sql = "SELECT a, count(*) FROM t GROUP BY a ORDER BY a"
-        assert rewrite(sql) == sql
+        assert spark_sql(sql) == sql
 
     def test_string_literals_never_rewritten(self):
         sql = (
             "SELECT 'call strftime(ts, ''%Y'') later' AS note, "
             "strftime(ts, '%Y') AS y FROM t"
         )
-        out = rewrite(sql)
+        out = spark_sql(sql)
         assert "'call strftime(ts, ''%Y'') later'" in out
         assert "date_format(ts, 'yyyy')" in out
 
     def test_nested_two_levels(self):
-        out = rewrite_functions(
+        out = spark_sql(
             "SELECT strftime(to_datetime(jp(js, '/ts')), '%Y-%m') FROM t"
         )
         assert out.startswith("SELECT date_format((coalesce(timestamp_seconds(")
@@ -65,11 +70,11 @@ class TestRewriteUnits:
         assert "'yyyy-MM')" in out
 
     def test_distinct_on_star_no_helper_leak(self):
-        out = rewrite_distinct_on("SELECT DISTINCT ON (k) * FROM t ORDER BY k, v")
+        out = spark_sql("SELECT DISTINCT ON (k) * FROM t ORDER BY k, v")
         assert "SELECT * EXCEPT (__exo_rn) FROM" in out
 
     def test_distinct_on_in_subquery(self):
-        out = rewrite_distinct_on(
+        out = spark_sql(
             "SELECT count(*) AS n FROM "
             "(SELECT DISTINCT ON (k) k, v FROM t ORDER BY k, v DESC) s"
         )
@@ -77,14 +82,14 @@ class TestRewriteUnits:
         assert out.startswith("SELECT count(*) AS n FROM (")
 
     def test_distinct_on_literal_containing_keyword(self):
-        out = rewrite_distinct_on(
+        out = spark_sql(
             "SELECT DISTINCT ON (k) k, 'ORDER BY trap LIMIT 3' AS s FROM t"
         )
         assert "'ORDER BY trap LIMIT 3'" in out
         assert "__exo_rn = 1" in out and not out.rstrip().endswith("LIMIT 3")
 
     def test_distinct_on_function_keys(self):
-        out = rewrite_distinct_on(
+        out = spark_sql(
             "SELECT DISTINCT ON (lower(k), f(a, b)) k, v FROM t"
         )
         assert "PARTITION BY lower(k), f(a, b)" in out
@@ -92,13 +97,55 @@ class TestRewriteUnits:
     def test_double_quoted_strings_masked(self):
         # exosql examples write double-quoted strings (LIKE "%x%")
         sql = 'SELECT "call strftime(ts) now" AS s, strftime(ts, "%Y") AS y FROM t'
-        out = rewrite(sql)
+        out = spark_sql(sql)
         assert '"call strftime(ts) now"' in out
         assert "date_format(ts, 'yyyy')" in out
 
     def test_backslash_escaped_quote_in_literal(self):
         sql = r"SELECT 'it\'s strftime(x, \'%Y\') time' AS s FROM t"
-        assert rewrite(sql) == sql
+        assert spark_sql(sql) == sql
+
+    def test_qualify_after_top_level_with(self):
+        # the WITH clause stays outside the desugar; the CTE body is a
+        # level of its own
+        assert spark_sql(
+            "WITH cte AS (SELECT a, b FROM t) "
+            "SELECT a FROM cte QUALIFY rank() OVER (ORDER BY b) = 1"
+        ) == (
+            "WITH cte AS (SELECT a, b FROM t) "
+            "SELECT * EXCEPT (__exo_q) FROM ("
+            "SELECT a, (rank() OVER (ORDER BY b) = 1) AS __exo_q FROM cte"
+            ") WHERE __exo_q"
+        )
+
+    def test_distinct_on_after_top_level_with(self):
+        assert spark_sql(
+            "WITH cte AS (SELECT k, v FROM t) "
+            "SELECT DISTINCT ON (k) k, v FROM cte ORDER BY k, v"
+        ) == (
+            "WITH cte AS (SELECT k, v FROM t) "
+            "SELECT k, v FROM ("
+            "SELECT *, row_number() OVER (PARTITION BY k ORDER BY k, v) AS __exo_rn "
+            "FROM cte) WHERE __exo_rn = 1 ORDER BY k, v"
+        )
+
+    def test_db_table_and_vars_in_the_same_pass(self):
+        asked = []
+
+        def tables(db):
+            def names():
+                asked.append(db)
+                return ["t", "u"]
+
+            return names
+
+        sql, refs = rewrite(
+            "SELECT 'db.t $x', a FROM db.t JOIN db . u ON $k = $$1",
+            {"db": tables("db"), "other": tables("other")},
+        )
+        assert sql == "SELECT 'db.t $x', a FROM db_t JOIN db_u ON :k = $1"
+        assert refs == [("db", "t"), ("db", "u")]
+        assert asked == ["db"]  # an unmentioned database is never asked
 
 
 class TestDialectEndToEnd:
@@ -170,6 +217,39 @@ class TestDialectEndToEnd:
         ).collect()
         assert rows[0].cur == "price in $USD" and rows[0].o_orderkey == 1
 
+    def _one_row(self, spark):
+        from datetime import datetime
+
+        df = spark.createDataFrame([(datetime(2024, 1, 2, 3, 4, 5),)], "ts timestamp")
+        return df, Context(spark, {"d": {"tables": {"t": df}}})
+
+    def test_qualify_after_top_level_with_executes(self, spark):
+        _, ctx = self._one_row(spark)
+        rows = ctx.sql(
+            "WITH cte AS (SELECT ts FROM d.t) "
+            "SELECT ts FROM cte QUALIFY row_number() OVER (ORDER BY ts) = 1"
+        ).collect()
+        assert len(rows) == 1
+
+    def test_distinct_on_after_top_level_with_executes(self, spark):
+        _, ctx = self._one_row(spark)
+        df = ctx.sql("WITH cte AS (SELECT ts FROM d.t) SELECT DISTINCT ON (ts) ts FROM cte")
+        assert df.columns == ["ts"] and len(df.collect()) == 1
+
+    def test_strftime_epoch_seconds_matches_column_builder(self, spark):
+        """SQL ``strftime`` and the Column builder splice ``%s`` the same
+        way (epoch seconds, not Java's second-of-minute)."""
+        from exosql_spark.functions.datetime_compat import strftime
+
+        df, ctx = self._one_row(spark)
+        for fmt in ("%s", "%Y-%m-%d %s", "%Y"):
+            got = ctx.sql(f"SELECT strftime(ts, '{fmt}') AS s FROM d.t").collect()
+            want = df.select(strftime("ts", fmt).alias("s")).collect()
+            assert got == want, fmt
+        assert got[0].s == "2024"
+        epoch = ctx.sql("SELECT strftime(ts, '%s') AS s FROM d.t").first().s
+        assert epoch == str(int(df.selectExpr("unix_timestamp(ts) AS e").first().e))
+
 
 class TestContextApi:
     def test_lazy_registration(self, spark, sf_dir):
@@ -217,9 +297,7 @@ class TestContextApi:
 
 class TestQualifyDesugar:
     def test_rewrite_shape(self):
-        from exosql_spark.dialect import rewrite_qualify
-
-        out = rewrite_qualify(
+        out = spark_sql(
             "SELECT a, rank() OVER (ORDER BY b) AS r FROM t QUALIFY r = 1"
         )
         assert out.startswith("SELECT * EXCEPT (__exo_q) FROM (")
@@ -227,29 +305,23 @@ class TestQualifyDesugar:
         assert "(r = 1) AS __exo_q" in out
 
     def test_order_limit_stay_outside(self):
-        from exosql_spark.dialect import rewrite_qualify
-
-        out = rewrite_qualify(
+        out = spark_sql(
             "SELECT a FROM t QUALIFY rank() OVER (ORDER BY b) <= 3 "
             "ORDER BY a LIMIT 5"
         )
         assert out.endswith("WHERE __exo_q ORDER BY a LIMIT 5")
 
     def test_subquery_recursion_and_noop(self):
-        from exosql_spark.dialect import rewrite_qualify
-
-        out = rewrite_qualify(
+        out = spark_sql(
             "SELECT a FROM t WHERE x IN "
             "(SELECT y FROM u QUALIFY rank() OVER (ORDER BY z) = 1)"
         )
         assert "WHERE x IN (SELECT * EXCEPT (__exo_q)" in out
-        assert rewrite_qualify("SELECT a FROM t") == "SELECT a FROM t"
+        assert spark_sql("SELECT a FROM t") == "SELECT a FROM t"
 
     def test_qualify_inside_string_literal_untouched(self):
-        from exosql_spark.dialect import rewrite_qualify
-
         sql = "SELECT a FROM t WHERE b = 'does not qualify for this'"
-        assert rewrite_qualify(sql) == sql
+        assert spark_sql(sql) == sql
 
     def test_qualify_as_column_name_untouched(self):
         """ADVICE r12: ``qualify`` is non-reserved — a column named
@@ -257,8 +329,6 @@ class TestQualifyDesugar:
         must NOT trigger the desugar (the old token-only trigger
         produced malformed SQL); a real QUALIFY clause (predicate
         expression after the token, including NOT) still does."""
-        from exosql_spark.dialect import rewrite_qualify
-
         for sql in (
             "SELECT a FROM t WHERE qualify = 1",
             "SELECT a FROM t WHERE qualify IS NULL",
@@ -274,13 +344,13 @@ class TestQualifyDesugar:
             "SELECT a FROM t WHERE qualify NOT BETWEEN 1 AND 2",
             "SELECT a FROM t WHERE qualify NOT RLIKE '^x'",
         ):
-            assert rewrite_qualify(sql) == sql, sql
+            assert spark_sql(sql) == sql, sql
         # real clauses still desugar — including bare QUALIFY NOT <pred>
         for sql in (
             "SELECT a FROM t QUALIFY rank() OVER (ORDER BY z) = 1",
             "SELECT a FROM t QUALIFY NOT (rank() OVER (ORDER BY z) > 2)",
         ):
-            assert "__exo_q" in rewrite_qualify(sql), sql
+            assert "__exo_q" in spark_sql(sql), sql
 
     def test_qualify_column_executes(self, spark, sf_dir):
         """End-to-end: a table with a column literally named qualify
@@ -330,24 +400,22 @@ class TestQualifyDesugar:
 
 class TestStarExclude:
     def test_rewrite_only_after_star(self):
-        from exosql_spark.dialect import rewrite_star_exclude
-
         assert (
-            rewrite_star_exclude("SELECT * EXCLUDE (a, b) FROM t")
+            spark_sql("SELECT * EXCLUDE (a, b) FROM t")
             == "SELECT * EXCEPT (a, b) FROM t"
         )
         assert (
-            rewrite_star_exclude("SELECT t.* exclude(x) FROM t")
+            spark_sql("SELECT t.* exclude(x) FROM t")
             == "SELECT t.* EXCEPT(x) FROM t"
         )
         # DISTINCT/ALL between SELECT and the star still rewrite,
         # and a comma-separated later star does too
         assert (
-            rewrite_star_exclude("SELECT DISTINCT * EXCLUDE (a) FROM t")
+            spark_sql("SELECT DISTINCT * EXCLUDE (a) FROM t")
             == "SELECT DISTINCT * EXCEPT (a) FROM t"
         )
         assert (
-            rewrite_star_exclude("SELECT a, * EXCLUDE (b) FROM t")
+            spark_sql("SELECT a, * EXCLUDE (b) FROM t")
             == "SELECT a, * EXCEPT (b) FROM t"
         )
         # a column/alias literally named exclude is untouched
@@ -360,7 +428,7 @@ class TestStarExclude:
             "SELECT price * exclude(x) FROM t",
             "SELECT a FROM t WHERE b * exclude(c) > 0",
         ):
-            assert rewrite_star_exclude(sql) == sql
+            assert spark_sql(sql) == sql
 
     def test_executes_and_prunes_schema(self, spark, sf_dir):
         """The desugared projection must reach the parquet scan's
