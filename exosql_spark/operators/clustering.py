@@ -1,31 +1,24 @@
 """Embedding clustering: Lloyd's k-means over an `array<float>` column.
 
-The iterative workload pattern at 100 TB:
+Train once on a bounded sample, assign everywhere. One numpy Lloyd
+core (:func:`_lloyd`) trains every k-means in the package —
+:func:`kmeans`, :func:`train_kmeans_sample`, ``pq.train_codebooks``
+and SemDeDup — on a collected sample of at most ``max(10·k, 500)``
+rows (:func:`training_sample`). Assignment is then one map fused into
+the scan: literal-centroid Column math (:func:`assign_clusters`) or an
+Arrow-batched argmin (:func:`assign_clusters_pandas`, for large k).
+The corpus never leaves the executors, and Spark runs the same jobs
+at any fixed iteration budget ``iters``.
 
-- Centroids are TINY (k × dim doubles) — they live on the driver
-  between iterations and enter each assignment pass as *literal
-  arrays* folded into the expression tree (an explicit broadcast of
-  bounded size, like components.py's edge list). The corpus frame is
-  never collected.
-- Each iteration is one scan + one k-way partial aggregation: assign
-  (argmin over k squared distances, all JVM Column math — zip_with/
-  aggregate, no Python in the row path) → groupBy(cluster) partial
-  sums → k rows to the driver. Shuffle volume per iteration is
-  k × dim × n_partitions partial sums, independent of corpus size.
-- Iteration count is a fixed budget (`iters`), not a convergence
-  loop over the full corpus: at scale you run a fixed number of
-  passes (or test movement on the k×dim centroid matrix driver-side,
-  which is free).
-
-Determinism: init takes the k lowest-id vectors (no RNG), ties in
-argmin break toward the lower cluster id — rerunning yields identical
-assignments, so the operator is reproducible (the catalog entry is
-rows-only only because cross-engine float summation order differs,
-not because the algorithm is nondeterministic).
+Determinism: seeding is farthest-first from the lowest id, the
+deterministic form of the D² rule of k-means‖ (Bahmani et al.,
+"Scalable K-Means++", VLDB 2012), so separable clusters are recovered
+even when the lowest ids share one. Argmin ties break toward the
+lower cluster and clusters are numbered by their lowest member id, so
+reruns yield identical labels.
 
 Reference: this is an extension beyond serverboards/exosql (no
-clustering there); the Spark-side pattern follows the classic MLlib
-KMeans shape re-expressed in DataFrame ops.
+clustering there).
 """
 
 from __future__ import annotations
@@ -73,45 +66,6 @@ def assign_clusters(
     return df.withColumn(
         "cluster", F.when(not_null, scored["cluster"])
     ).withColumn("sq_dist", F.when(not_null, scored["d"]))
-
-
-def _mean_centroids(assigned: DataFrame, vec_col: str, dim: int, k: int) -> list[list[float]]:
-    """Per-cluster mean vectors via posexplode + (cluster, pos) agg —
-    k × dim result rows; the only driver-side data is that matrix."""
-    rows = (
-        assigned.select("cluster", F.posexplode(F.col(vec_col).cast("array<double>")))
-        .groupBy("cluster", "pos")
-        .agg(F.avg("col").alias("v"))
-        .collect()
-    )
-    out: dict[int, list[float]] = {}
-    for r in rows:
-        out.setdefault(r["cluster"], [0.0] * dim)[r["pos"]] = r["v"]
-    # empty clusters keep their previous position implicitly (caller
-    # passes previous centroids as fallback)
-    return [out.get(i) for i in range(k)]
-
-
-def kmeans(
-    df: DataFrame,
-    k: int = 5,
-    iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> tuple[list[list[float]], DataFrame]:
-    """Lloyd's algorithm with deterministic lowest-id init. Returns
-    (final centroids, assigned frame with cluster/sq_dist columns).
-
-    Each iteration moves k × dim doubles driver→executors (literals)
-    and back (partial means) — corpus never leaves the executors."""
-    first = df.orderBy(id_col).limit(k).select(F.col(vec_col).cast("array<double>"))
-    centroids = [list(r[0]) for r in first.collect()]
-    dim = len(centroids[0])
-    for _ in range(iters):
-        assigned = assign_clusters(df, centroids, vec_col)
-        new = _mean_centroids(assigned, vec_col, dim, k)
-        centroids = [n if n is not None else c for n, c in zip(new, centroids)]
-    return centroids, assign_clusters(df, centroids, vec_col)
 
 
 def _sq_dists(x, c):
@@ -185,6 +139,60 @@ def assign_clusters_pandas(
     ).drop("_a")
 
 
+# Ten sampled rows per centroid, never fewer than 500 in all.
+_TRAIN_SAMPLE_MIN = 500
+
+
+def training_sample(df: DataFrame, k: int, id_col: str = "vec_id") -> DataFrame:
+    """The bounded, deterministic training sample: the first
+    ``max(10·k, 500)`` rows in ``(xxhash64(id), id)`` order. The hash
+    spreads it over the whole id range, so a corpus stored topic by
+    topic still shows every topic to the trainer."""
+    return df.orderBy(F.xxhash64(id_col), id_col).limit(
+        max(10 * k, _TRAIN_SAMPLE_MIN)
+    )
+
+
+def _check_k(k: int, iters: int) -> None:
+    if k < 1:
+        raise ValueError(f"k-means: k must be >= 1, got k={k}")
+    if iters < 0:
+        raise ValueError(f"k-means: iters must be >= 0, got iters={iters}")
+
+
+def _lloyd(x, k: int, iters: int) -> list[list[float]]:
+    """The one Lloyd core over an n × dim float64 matrix whose rows are
+    in id order (callers run :func:`_check_k` before they collect).
+    Seeds farthest-first from row 0 (each next seed maximizes the
+    squared distance to its nearest seed; ties → the lower row), runs
+    ``iters`` assign/mean steps (argmin ties → the lower cluster; an
+    empty cluster keeps its centroid), then numbers the centroids by
+    their lowest member row, memberless ones last."""
+    import numpy as np
+
+    n = len(x)
+    if n < k:
+        raise ValueError(
+            f"k-means: k={k} exceeds the {n} non-NULL rows of the training"
+            " sample" + ("" if n else " (empty training sample)")
+        )
+    seeds = [0]
+    near = ((x - x[0]) ** 2).sum(1)
+    while len(seeds) < k:
+        seeds.append(int(near.argmax()))
+        near = np.minimum(near, ((x - x[seeds[-1]]) ** 2).sum(1))
+    c = x[seeds]
+    for _ in range(iters):
+        a = _sq_dists(x, c).argmin(1)
+        for j in range(k):
+            members = x[a == j]
+            if len(members):
+                c[j] = members.mean(0)
+    labels, first = np.unique(_sq_dists(x, c).argmin(1), return_index=True)
+    order = list(labels[np.argsort(first)])
+    return c[order + sorted(set(range(k)) - set(order))].tolist()
+
+
 def train_kmeans_sample(
     sample: DataFrame,
     k: int = 16,
@@ -192,31 +200,40 @@ def train_kmeans_sample(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> list[list[float]]:
-    """Driver-side Lloyd on a COLLECTED bounded sample — the
-    train-once/assign-everywhere shape: k-means converges on 10⁵-ish
-    vectors, so training never needs the cluster, and a numpy loop
-    avoids rebuilding the k×dim literal-centroid expression tree every
-    iteration (Catalyst analysis of those trees is what dominates
-    distributed training on small samples — measured ~5 s of the
-    dedup_semantic entry's 6.5 s at k=16, dim=64). Semantics match
-    :func:`kmeans`: lowest-id init, argmin ties break to the lower
-    cluster (numpy argmin keeps the first occurrence), empty clusters
-    keep their previous centroid. The caller bounds the sample; only
-    k × dim floats leave the driver afterwards."""
+    """Train k centroids on a bounded sample (the caller bounds it;
+    :func:`training_sample` is the default): one collect of its
+    non-NULL vectors in id order, then :func:`_lloyd` on the driver.
+    Training driver-side also avoids rebuilding the k×dim literal-
+    centroid tree per iteration, whose Catalyst analysis dominated
+    distributed training (~5 s of dedup_semantic's 6.5 s at k=16,
+    dim=64). Raises ``ValueError`` for ``k < 1``, ``iters < 0`` or
+    fewer than k non-NULL vectors."""
     import numpy as np
 
-    rows = sample.select(id_col, vec_col).orderBy(id_col).collect()
-    if not rows:
-        raise ValueError("train_kmeans_sample: empty training sample")
-    x = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    c = x[:k].copy()
-    for _ in range(iters):
-        a = _sq_dists(x, c).argmin(1)
-        for j in range(k):
-            members = x[a == j]
-            if len(members):
-                c[j] = members.mean(0)
-    return c.tolist()
+    _check_k(k, iters)
+    rows = (
+        sample.where(F.col(vec_col).isNotNull())
+        .select(id_col, vec_col)
+        .orderBy(id_col)
+        .collect()
+    )
+    return _lloyd(np.array([list(r[1]) for r in rows], dtype=np.float64), k, iters)
+
+
+def kmeans(
+    df: DataFrame,
+    k: int = 5,
+    iters: int = 3,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> tuple[list[list[float]], DataFrame]:
+    """Lloyd's k-means: :func:`train_kmeans_sample` on
+    :func:`training_sample`, then one assignment pass over ``df``.
+    Returns (centroids, ``df`` with cluster/sq_dist columns)."""
+    centroids = train_kmeans_sample(
+        training_sample(df, k, id_col), k, iters, vec_col, id_col
+    )
+    return centroids, assign_clusters(df, centroids, vec_col)
 
 
 def kmeans_summary(

@@ -11,10 +11,10 @@ PQ codes per cell is classic IVFADC).
 
 How it scales:
 
-- **Training** runs m independent k-means over sub-vectors of a
-  (driver-bounded) sample — codebooks are m × k × (dim/m) floats,
-  e.g. 8 × 16 × 8 = 1 Ki floats: they travel as expression literals,
-  never as a join side.
+- **Training** runs the one k-means core (``clustering._lloyd``)
+  once per subspace over sub-vectors of a (driver-bounded) sample —
+  codebooks are m × k × (dim/m) floats, e.g. 8 × 16 × 8 = 1 Ki
+  floats: they travel as expression literals, never as a join side.
 - **Encoding** is a pure map (argmin over k literal centroids per
   subspace): a 64-float vector becomes m small codes — 8 bytes with
   m=8, k≤256 — a 32× compression; the encoded table is what you
@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from exosql_spark.operators.clustering import _sq_dist
+from exosql_spark.operators.clustering import _check_k, _lloyd, _sq_dist
 
 
 def collect_vectors(
@@ -62,49 +62,37 @@ def train_codebooks(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> list[list[list[float]]]:
-    """Train m per-subspace codebooks of k centroids each by running
-    deterministic Lloyd k-means (lowest-id init, argmin ties → lower
-    code, empty clusters keep their previous centroid) on each
-    dim/m-wide sub-vector slice of ``sample``.
+    """Train m per-subspace codebooks of k centroids each: the one
+    k-means core (``clustering._lloyd``) on each dim/m-wide slice of a
+    bounded ``sample`` (PQ codebooks converge on ~10⁵–10⁶ vectors), so
+    it is COLLECTED once and every Lloyd step runs driver-side — no
+    k × sub_dim literal trees for Catalyst to re-analyze. Returns
+    plain Python lists — the codebooks are literal-sized by
+    construction.
 
-    ``sample`` should be a bounded training sample at real scale
-    (PQ codebooks converge on ~10⁵–10⁶ vectors; training never needs
-    the full corpus) — so it is COLLECTED once and all m × iters
-    Lloyd passes run driver-side in numpy. The previous distributed
-    formulation spent ~18 s per training run just re-analyzing the
-    k × sub_dim literal-centroid expression trees it rebuilt for every
-    (subspace, iteration) pair — the same Catalyst-analysis trap
-    clustering.train_kmeans_sample documents. Returns plain Python
-    lists — the codebooks are literal-sized by construction.
-
-    ``sample`` may be pre-collected ``(id, vector)`` rows from
-    :func:`collect_vectors` (r19): callers that also need query
-    vectors driver-side then pay ONE collect job for both."""
+    ``sample`` may be pre-collected ``(id, vector)`` rows in id order
+    from :func:`collect_vectors` (r19): callers that also need query
+    vectors driver-side then pay ONE collect job for both. NULL
+    vectors are skipped. Raises ``ValueError`` when m does not divide
+    dim, for ``k < 1`` or ``iters < 0``, and for fewer than k non-NULL
+    vectors."""
     import numpy as np
 
-    assert dim % m == 0, "dim must divide evenly into m subspaces"
+    if m < 1 or dim % m:
+        raise ValueError(
+            f"train_codebooks: m={m} must divide dim={dim} into equal subspaces"
+        )
+    _check_k(k, iters)
     sub_dim = dim // m
-    rows = (
-        sample
-        if isinstance(sample, list)
-        else collect_vectors(sample, id_col, vec_col)
-    )
-    if not rows:
-        raise ValueError("train_codebooks: empty training sample")
-    x = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    books: list[list[list[float]]] = []
-    for j in range(m):
-        sub = x[:, j * sub_dim : (j + 1) * sub_dim]
-        c = sub[:k].copy()
-        for _ in range(iters):
-            d = ((sub[:, None, :] - c[None, :, :]) ** 2).sum(-1)
-            a = d.argmin(1)
-            for ci in range(k):
-                members = sub[a == ci]
-                if len(members):
-                    c[ci] = members.mean(0)
-        books.append(c.tolist())
-    return books
+    if not isinstance(sample, list):
+        sample = collect_vectors(
+            sample.where(F.col(vec_col).isNotNull()), id_col, vec_col
+        )
+    vecs = [v for _, v in sample if v is not None]
+    x = np.array(vecs, dtype=np.float64).reshape(len(vecs), dim)
+    return [
+        _lloyd(x[:, j * sub_dim : (j + 1) * sub_dim], k, iters) for j in range(m)
+    ]
 
 
 def pq_encode(

@@ -10,9 +10,11 @@ the standard web-scale companion pass. The structure:
    After normalization, L2 k-means is cosine clustering, and a scaled
    copy of a vector becomes bitwise the same direction — so duplicate
    detection is invariant to embedding magnitude.
-2. **Cluster** with deterministic Lloyd k-means
-   (:mod:`exosql_spark.operators.clustering`): centroids travel as
-   k × dim literals, assignment is a pure map fused into the scan.
+2. **Cluster** with the one deterministic k-means
+   (:mod:`exosql_spark.operators.clustering`): numpy Lloyd with
+   farthest-first seeding on a bounded hash-ordered sample, then one
+   assignment map fused into the scan — literal centroids, or the
+   Arrow-batched argmin at large k.
 3. **Pair search within clusters only**: a self equi-join on the
    cluster id. This is the whole point at scale — candidate work is
    Σ_c |c|² instead of n²; with k sized so clusters hold ~n/k ≈ 10⁴
@@ -49,11 +51,6 @@ from exosql_spark.operators.similarity import _cosine_sql, _norm, cosine  # noqa
 # is k ∝ n for exactly this reason.
 _AUTO_K_VECTORS_PER_CLUSTER = 125
 _AUTO_K_FLOOR = 16
-# Above this k the literal-centroid expression tree is infeasible
-# (Catalyst analysis cost grows with k × dim; see
-# clustering.assign_clusters_pandas) — the auto path always trains on a
-# bounded sample and assigns via the Arrow-batched argmin instead.
-_AUTO_TRAIN_SAMPLE_MIN = 500
 
 
 def derive_k(n_vectors: int) -> int:
@@ -149,16 +146,17 @@ def semantic_dedup_pairs(
     :func:`derive_k`): candidate work is Σ|c|², so a FIXED small k
     turns quadratic as the corpus grows (k=16 at 200 k vectors →
     1.25 × 10⁹ pairs → worker OOM, measured round 8), while k ∝ n
-    stays linear. The auto path trains on a bounded lowest-id sample
-    (driver-side numpy Lloyd, ``train_kmeans_sample``) and assigns via
-    the Arrow-batched argmin — the only trainer/assigner shape that
-    survives large k. **Execution contract**: deriving k runs one
-    ``count()`` job and one bounded sample ``collect()`` at plan-
-    composition time (the rest stays lazy); pass explicit ``k`` or
+    stays linear. Every path without ``centroids`` trains the same
+    way: the one k-means core (``clustering.train_kmeans_sample``,
+    driver-side numpy Lloyd) on the bounded hash-ordered
+    ``clustering.training_sample`` of max(10·k, 500) vectors.
+    **Execution contract**: training runs one bounded sample
+    ``collect()`` at plan-composition time, and deriving k one
+    ``count()`` job before it (the rest stays lazy); pass
     ``centroids`` to compose fully lazily.
     ``centroids``: pass pre-trained centroids (e.g. from a bounded
     sample — the production shape: train once, assign everywhere) to
-    skip the Lloyd iterations; assignment is identical either way.
+    skip training; assignment is identical either way.
     ``scorer``: 'hof' (default) keeps pair scoring in pure Column
     expressions (no Python workers); 'pandas' scores candidate pairs
     with the Arrow-batched numpy cosine — the measured scale path
@@ -167,46 +165,33 @@ def semantic_dedup_pairs(
     ``assigner``: 'hof' builds the literal-centroid expression tree,
     'pandas' the Arrow-batched argmin (clustering.
     assign_clusters_pandas) — mandatory at large k, where the literal
-    tree's Catalyst analysis cost explodes; requires ``centroids``.
-    ``None`` (default) resolves to 'pandas' on the auto-k path and
+    tree's Catalyst analysis cost explodes. ``None`` (default) resolves to 'pandas' on the auto-k path and
     'hof' otherwise; an explicit value is always honored.
     Columns: id_a, id_b, cluster, cosine_sim."""
     from exosql_spark.operators.clustering import (
         assign_clusters,
         assign_clusters_pandas,
-        kmeans,
+        train_kmeans_sample,
+        training_sample,
     )
     from exosql_spark.operators.dedup import _cap_buckets, _parallelize
 
     df = _parallelize(df.select(F.col(id_col), F.col(vec_col)))
     if normalize:
         df = normalize_embeddings(df, vec_col)
-    if k is None and centroids is None:
-        # scale-safe default: derive k from the corpus size and train
-        # on a bounded lowest-id sample (one count job + one bounded
-        # collect — the documented composition-time contract above)
-        from exosql_spark.operators.clustering import train_kmeans_sample
-
-        k = derive_k(df.count())
-        sample = df.orderBy(id_col).limit(
-            max(10 * k, _AUTO_TRAIN_SAMPLE_MIN)
-        )
-        centroids = train_kmeans_sample(
-            sample, k=k, iters=iters, vec_col=vec_col, id_col=id_col
-        )
-        if assigner is None:
-            # default for auto-k: mandatory at large k (Catalyst tree
-            # cost); an EXPLICIT assigner="hof" is honored — the caller
-            # owns the analysis-cost trade documented above
-            assigner = "pandas"
     if assigner is None:
-        assigner = "hof"
+        # the auto-k path may derive a large k, where only the Arrow
+        # argmin is feasible; an EXPLICIT assigner is always honored —
+        # the caller owns the analysis-cost trade documented above
+        assigner = "pandas" if k is None and centroids is None else "hof"
     if centroids is None:
-        _, assigned = kmeans(df, k, iters, vec_col, id_col)
-    elif assigner == "pandas":
-        assigned = assign_clusters_pandas(df, centroids, vec_col)
-    else:
-        assigned = assign_clusters(df, centroids, vec_col)
+        if k is None:
+            k = derive_k(df.count())
+        centroids = train_kmeans_sample(
+            training_sample(df, k, id_col), k, iters, vec_col, id_col
+        )
+    assign = assign_clusters_pandas if assigner == "pandas" else assign_clusters
+    assigned = assign(df, centroids, vec_col)
     sides = assigned.select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"), "cluster"
     )

@@ -430,28 +430,25 @@ def lm_score(
     broadcast applies when it fits. Mean is decimal-stable (order-
     independent) so the result is engine-portable.
     """
-    toks = tokens(normalize_text(F.col(text_col)))
-    n = F.size(toks)
-    # filter BEFORE the explode: sequence(1, n-1) at n < 2 would run
-    # DESCENDING (Spark auto-picks step -1), not empty.
+    # tokenize ONCE into a column: Catalyst shares no subexpression
+    # across lambda invocations, so a per-bigram lambda over the
+    # tokenize expression would re-run the regex normalize + split for
+    # every bigram. The two shifted slices zip into (prev, cur) pairs;
+    # a doc with < 2 tokens yields none.
+    t = F.col("_toks")
+    m = F.greatest(F.size(t) - 1, F.lit(0))
     # persist: FOUR consumers (bigram counts, unigram counts, vocab
     # size, scoring join) — without the barrier the regex tokenize +
     # explode re-executes per consumer.
     big = (
-        df.filter(n >= 2)
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), n - 1),
-                    lambda i: F.struct(
-                        F.element_at(toks, i).alias("prev"),
-                        F.element_at(toks, i + 1).alias("cur"),
-                    ),
-                )
-            ).alias("bg"),
+        df.select(
+            F.col(id_col), tokens(normalize_text(F.col(text_col))).alias("_toks")
         )
-        .select(id_col, "bg.prev", "bg.cur")
+        .select(
+            id_col,
+            F.explode(F.arrays_zip(F.slice(t, 1, m), F.slice(t, 2, m))).alias("bg"),
+        )
+        .select(id_col, F.col("bg.0").alias("prev"), F.col("bg.1").alias("cur"))
         .transform(managed_persist)
     )
     c2 = big.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("_c2"))

@@ -2384,7 +2384,7 @@ def dedup_jaccard_exact_pairs(spark, sf_dir):
 )
 def similarity_topk_pq(spark, sf_dir):
     """Product-quantization ANN (Jégou et al. 2011): m=8 subspace
-    codebooks (k=16, deterministic Lloyd init) trained on the corpus,
+    codebooks (k=16, deterministic Lloyd) trained on the corpus,
     vectors encoded to 8 small codes (32× compression), queries scored
     via ADC literal-table lookups — no decode, no join, no per-row
     Python; two-level top-k bounds every reducer. The compressed-domain
@@ -2705,10 +2705,11 @@ def similarity_topk_ivfpq_rerank_planted(spark, sf_dir):
     tags=("llm", "embedding", "scale"),
 )
 def embedding_kmeans(spark, sf_dir):
-    """Lloyd k-means (k=5, 3 fixed iterations, deterministic lowest-id
-    init) over the embeddings table: per-cluster sizes + inertia.
-    Centroids travel as k×dim literals; the corpus never leaves the
-    executors — the iterative-algorithm pattern at 100 TB."""
+    """Lloyd k-means (k=5, 3 fixed iterations, deterministic
+    farthest-first seeding) over the embeddings table: per-cluster
+    sizes + inertia. Trained on a bounded sample, then one assignment
+    map with k×dim literal centroids — the corpus never leaves the
+    executors."""
     from exosql_spark.operators import clustering
 
     t = Tables(spark, sf_dir)
@@ -2742,10 +2743,10 @@ ORDER BY cluster
 def embedding_kmeans_planted(spark, sf_dir):
     """Lloyd k-means exact-oracled on PLANTED well-separated clusters:
     100 synthetic 8-dim vectors at 5 orthogonal corners (magnitude 10)
-    with closed-form deterministic jitter (±0.05). The lowest-id init
-    seeds (ids 0–4) each sit in a distinct planted cluster, so 3 Lloyd
-    iterations provably converge to the planted partition — which lets
-    the oracle compute cluster sizes and inertia DIRECTLY from the
+    with closed-form deterministic jitter (±0.05). Farthest-first
+    seeding puts one seed at each corner, so 3 Lloyd iterations
+    provably converge to the planted partition — which lets the
+    oracle compute cluster sizes and inertia DIRECTLY from the
     construction (per-cluster means + squared deviations), no
     iteration modelling. Separation (inter-center distance 14.1 vs
     jitter 0.05) makes assignments immune to cross-engine float-ulp
@@ -2782,12 +2783,13 @@ def dedup_semantic_planted(spark, sf_dir):
     """SemDeDup (k-means clusters → within-cluster cosine pairs,
     operators/semdedup.py) exact-oracled on the SAME planted
     construction as embedding_kmeans_planted: 100 vectors at 5
-    orthogonal corners with closed-form jitter. The lowest-id init
-    seeds one centroid per corner, so Lloyd provably recovers the
-    planted partition (cluster label = id % 5); every same-corner pair
-    has cosine ≈ 0.9998+ (jitter 0.05 against magnitude 10) and every
-    cross-corner pair is never compared (different clusters) — so the
-    pair set is exactly all same-residue pairs: C(20,2) × 5 = 950
+    orthogonal corners with closed-form jitter. Farthest-first seeding
+    puts one centroid per corner, so Lloyd provably recovers the
+    planted partition (numbered by lowest id: label = id % 5); every
+    same-corner pair has cosine ≈ 0.9998+ (jitter 0.05 against
+    magnitude 10) and every cross-corner pair is never compared
+    (different clusters) — so the pair set is exactly all
+    same-residue pairs: C(20,2) × 5 = 950
     rows, which the oracle states without modelling Lloyd or cosine.
     cosine_sim is dropped from the output (each pair's value is
     jitter-dependent and could straddle a rounding boundary between
@@ -2832,18 +2834,16 @@ def dedup_semantic(spark, sf_dir):
     ``k`` is not passed, so semantic_dedup derives k ∝ n
     (``max(16, n // 125)`` — the measured rule that ran linear at the
     100× derived corpus where fixed k=16 OOM'd), trains driver-side on
-    a bounded lowest-id sample (train_kmeans_sample — the distributed
-    trainer spends ~5 s just ANALYZING the k×dim literal-centroid
-    trees it rebuilds per iteration), and assigns via the Arrow-batched
-    argmin. Pipeline: normalize → one assignment map pass →
-    within-cluster cosine ≥ threshold → keep-lowest-id anti-join; the
-    corpus sees a single map pass plus the cluster equi-join, and
-    candidate work is Σ|cluster|² ≈ 125·n/2, never n² (Abbas et al.
-    2023). Scoring uses the Arrow numpy cosine (scorer 'pandas',
-    pair-set-equal to the HOF path — tested). At sf0.01 (n=2000) the
-    derived k is 16 and the training sample is the lowest-id 500 —
-    the same operating point the fixed-k entry ran; at sf0.1 and the
-    derived 10×/100× corpora k grows to 160/1600 automatically.
+    a bounded hash-ordered sample (clustering.training_sample), and
+    assigns via the Arrow-batched argmin. Pipeline: normalize → one
+    assignment map pass → within-cluster cosine ≥ threshold →
+    keep-lowest-id anti-join; the corpus sees a single map pass plus
+    the cluster equi-join, and candidate work is Σ|cluster|² ≈ 125·n/2,
+    never n² (Abbas et al. 2023). Scoring uses the Arrow numpy cosine (scorer 'pandas',
+    pair-set-equal to the HOF path — tested). The testdata holds 500
+    embeddings at sf0.001/sf0.01 and 2000 at sf0.1, so the derived k
+    is 16 at every test SF; on the derived 10×/100× corpora (20 000 /
+    200 000 vectors) it grows to 160/1600 automatically.
 
     Threshold 0.35, not the paper's 0.95: the synthetic embeddings
     are near-isotropic (within-cluster cosine tops out ≈0.43/0.51/

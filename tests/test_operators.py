@@ -359,6 +359,14 @@ class TestProductQuantization:
             with pytest.raises(ValueError, match="empty training sample"):
                 fn()
 
+    def test_dim_not_divisible_by_m_raises(self, corpus):
+        """m must split dim into equal subspaces — a ValueError, which
+        unlike an assert still fires under ``python -O``."""
+        from exosql_spark.operators import pq
+
+        with pytest.raises(ValueError, match="m=3 must divide dim=16"):
+            pq.train_codebooks(corpus, m=3, k=8, iters=1, dim=16)
+
     def test_empty_query_frames(self, corpus, spark):
         """queries is caller-supplied: an empty frame must yield an
         empty, schema-faithful result, not an IndexError (pq_topk) or
@@ -971,8 +979,8 @@ class TestSemanticDedup:
         from exosql_spark.io import load_table
         from exosql_spark.operators import semdedup
 
-        assert semdedup.derive_k(2_000) == 16       # sf0.01 corpus
-        assert semdedup.derive_k(20_000) == 160     # sf0.1 corpus
+        assert semdedup.derive_k(2_000) == 16       # sf0.1 corpus
+        assert semdedup.derive_k(20_000) == 160     # the 10× point
         assert semdedup.derive_k(200_000) == 1_600  # the 100× point
         assert semdedup.derive_k(50) == 16          # floor
         base = load_table(spark, sf_dir, "embeddings").select(
@@ -2063,6 +2071,76 @@ class TestKmeans:
         # each blob of 4 consecutive ids lands in exactly one cluster
         assert sorted(map(tuple, (sorted(s) for s in by_cluster.values()))) == [
             (0, 1, 2, 3), (4, 5, 6, 7), (8, 9, 10, 11)]
+
+    def test_seeding_one_centroid_per_blob(self, spark):
+        """The lowest ids (0–3) all sit in blob A; farthest-first seeding
+        still gives every blob exactly one trained centroid."""
+        from exosql_spark.operators import clustering
+
+        cents = clustering.train_kmeans_sample(self._blobs(spark), k=3, iters=4)
+        bases = ([0.0] * 4, [10.0] * 4, [-10.0, 5.0, -5.0, 10.0])
+        near = [
+            sum(sum((c - b) ** 2 for c, b in zip(cent, base)) < 1.0 for cent in cents)
+            for base in bases
+        ]
+        assert near == [1, 1, 1], cents
+
+    def test_sorted_corpus_recovered_through_hashed_sample(self, spark):
+        """1500 rows stored blob by blob (ids 0–499 A, 500–999 B,
+        1000–1499 C): kmeans trains on a bounded hash-ordered sample,
+        which sees every blob, so each blob is one cluster — numbered by
+        its lowest member id. A lowest-id sample would see blob A only."""
+        from exosql_spark.operators import clustering
+
+        bases = ([0.0] * 4, [10.0] * 4, [-10.0, 5.0, -5.0, 10.0])
+        jitter = lambda i, j: (((i * 31 + j * 7) % 11) - 5) * 0.01
+        rows = [
+            (i, [v + jitter(i, j) for j, v in enumerate(bases[i // 500])])
+            for i in range(1500)
+        ]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        _, assigned = clustering.kmeans(df, k=3, iters=3)
+        wrong = assigned.filter(
+            F.col("cluster") != (F.col("vec_id") / 500).cast("int")
+        )
+        assert wrong.count() == 0, wrong.limit(5).collect()
+
+    def test_bad_k_iters_and_short_samples_raise(self, spark):
+        """k < 1, iters < 0 and a sample with fewer than k non-NULL rows
+        are caller errors: a ValueError naming k and the row count, not
+        a silently short centroid list."""
+        from exosql_spark.operators import clustering
+
+        df = self._blobs(spark)
+        nulls = spark.createDataFrame(
+            [(100 + i, None) for i in range(4)], "vec_id long, embedding array<double>"
+        )
+        three = df.filter(F.col("vec_id") < 3).unionByName(nulls)
+        for train in (clustering.kmeans, clustering.train_kmeans_sample):
+            with pytest.raises(ValueError, match="k=0"):
+                train(df, k=0)
+            with pytest.raises(ValueError, match="iters=-1"):
+                train(df, k=3, iters=-1)
+            with pytest.raises(ValueError, match="k=5 exceeds the 3 non-NULL rows"):
+                train(three, k=5)
+
+    def test_null_vectors_skipped_in_training(self, spark):
+        """NULL vectors — here the two lowest ids — are left out of
+        training; assignment gives them a NULL cluster."""
+        from exosql_spark.operators import clustering
+
+        nulls = spark.createDataFrame(
+            [(-2, None), (-1, None)], "vec_id long, embedding array<double>"
+        )
+        df = self._blobs(spark).unionByName(nulls)
+        assert len(clustering.train_kmeans_sample(df, k=3, iters=4)) == 3
+        _, assigned = clustering.kmeans(df, k=3, iters=4)
+        by_cluster = {}
+        for r in assigned.select("vec_id", "cluster").collect():
+            by_cluster.setdefault(r.cluster, set()).add(r.vec_id)
+        assert by_cluster == {
+            None: {-2, -1}, 0: {0, 1, 2, 3}, 1: {4, 5, 6, 7}, 2: {8, 9, 10, 11}
+        }
 
     def test_deterministic(self, spark):
         from exosql_spark.operators import clustering
@@ -4028,6 +4106,32 @@ def test_loop_jobs_pinned(spark, name):
     kept, relaid = _LOOP_JOBS[name]
     want = [relaid if 2 * min(4, c) <= c else kept for c in ceilings]
     assert got == want, (name, ceilings, got, want)
+
+
+def test_kmeans_jobs_flat_in_iters(spark):
+    """kmeans trains driver-side on one bounded sample, so Spark runs the
+    same jobs at every iteration budget (a distributed Lloyd loop pays
+    one collect per iteration)."""
+    import uuid
+
+    from exosql_spark.operators import clustering
+
+    df = spark.range(60).select(
+        F.col("id").alias("vec_id"),
+        F.array((F.col("id") % 3).cast("double"), (F.col("id") % 5).cast("double"))
+        .alias("embedding"),
+    )
+    sc = spark.sparkContext
+    got = []
+    for iters in (1, 4):
+        group = f"kmeans-jobs-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            clustering.kmeans(df, k=3, iters=iters)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        got.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert got[0] == got[1] >= 1, got
 
 
 def test_pagerank_tol_early_stop(spark):

@@ -1075,3 +1075,53 @@ class TestBenchTimesFullPlan:
         timed = timed - _NOOP_WRITE - _RENDERING_ONLY
         collected = collected - _RENDERING_ONLY
         assert timed == collected, timed ^ collected
+
+
+# -- no per-element recomputation inside higher-order lambdas ----------
+
+
+def _lambda_body_classes(df) -> set[str]:
+    """Expression class names inside any ``LambdaFunction`` of ``df``'s
+    optimized plan, cached subplans included (an ``InMemoryRelation``
+    hides its plan from ``children``). Catalyst does not share a
+    subexpression across lambda invocations, so work found here runs
+    once per array element."""
+    found: set[str] = set()
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def walk_expr(e, inside: bool) -> None:
+        name = e.getClass().getSimpleName()
+        if inside:
+            found.add(name)
+        for c in seq(e.children()):
+            walk_expr(c, inside or name == "LambdaFunction")
+
+    def walk_plan(p) -> None:
+        for e in seq(p.expressions()):
+            walk_expr(e, False)
+        if p.getClass().getSimpleName() == "InMemoryRelation":
+            walk_plan(p.cachedPlan())
+        for c in seq(p.children()):
+            walk_plan(c)
+
+    walk_plan(df._jdf.queryExecution().optimizedPlan())
+    return found
+
+
+class TestLambdaInvariantWork:
+    def test_lm_score_tokenizes_outside_the_bigram_lambda(self, spark, sf_dir):
+        """text_lm_score tokenizes each document once into a column; the
+        regex normalize + split must not sit in a lambda body, where it
+        would re-run for every bigram."""
+        from exosql_spark.cache import release_caches
+        from exosql_spark.catalog import all_queries
+
+        try:
+            inside = _lambda_body_classes(
+                all_queries()["text_lm_score"].fn(spark, sf_dir)
+            )
+        finally:
+            release_caches(spark)
+        assert not inside & {"StringSplit", "RegExpReplace"}, inside
