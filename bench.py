@@ -43,9 +43,11 @@ in an interleaved sweep:
 Every run goes through :func:`time_run`, which materializes the FULL
 result plan through the no-op sink (``count()`` let Catalyst prune
 windows, sorts and joins) under its own job group; ``jobs`` in the
-detail file is the last run's job count.  ``SESSION_CONF`` sizes the
-codegen cache to hold every entry's generated classes, so the
-interleaving recompiles nothing.  An entry's 5 samples span the whole
+detail file is the last run's job count.  The session
+``get_spark`` builds keeps its generated code (a codegen cache that
+holds every entry's classes; at Spark's default of 100 entries each
+interleaved pass recompiled all ~1.7k of them), so the interleaving
+recompiles nothing.  An entry's 5 samples span the whole
 sweep, so a CPU-steal storm on a shared VM (identical 2 s plans have
 measured 2 s / 12 s / 42 s purely by arrival time) inflates at most a
 few of them, and the minimum — the standard noise-robust estimator
@@ -77,7 +79,8 @@ import time
 
 from exosql_spark.cache import release_caches
 from exosql_spark.catalog import all_queries
-from exosql_spark.session import get_spark
+from exosql_spark.context import planned_confs
+from exosql_spark.session import get_spark, scoped_conf
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Overridable so auxiliary sweeps (the tools/gen_scaled.py 10× scale
@@ -100,15 +103,6 @@ EXCLUDE = [
 ]
 
 
-#: Session confs for every bench-timed session.  The codegen cache
-#: must hold the whole sweep's generated classes: at Spark's default of
-#: 100 entries each interleaved pass recompiled all ~1.7k of them, so
-#: every timed run paid Janino compilation and ran unjitted code.
-SESSION_CONF = {
-    "spark.ui.showConsoleProgress": "false",
-    "spark.sql.codegen.cache.maxEntries": "4096",
-}
-
 _RUN_IDS = itertools.count()
 
 
@@ -127,7 +121,10 @@ def time_run(spark, fn, sf_dir):
     try:
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
+        # the sink wraps df in a new plan: make it under the confs df's
+        # own plan was made under, so the run times what a collect runs
+        with scoped_conf(spark, planned_confs(df)):
+            df.write.format("noop").mode("overwrite").save()
         sec = time.perf_counter() - t0
     finally:
         sc.setJobGroup(None, None)
@@ -382,7 +379,7 @@ def summary_line(out: dict) -> str:
 def main() -> None:
     # Stage-progress bars write \r-spam to stderr/stdout that crowded the
     # driver's tail capture in r4/r5 — keep the bench process silent.
-    spark = get_spark(app_name="exosql_spark_bench", extra_conf=SESSION_CONF)
+    spark = get_spark(app_name="exosql_spark_bench")
     all_bench = {n: q for n, q in all_queries().items() if q.bench}
     unknown = [n for n in EXCLUDE if n not in all_bench]
     if unknown:

@@ -9,6 +9,24 @@ Reference surface (``lib/exosql.ex``):
     source resolution run once; ``spark.sql`` still parses and analyzes
     on every run) or :meth:`Context.sql` with ``vars``.
 
+Each query is sized from its inputs.  When the estimated size of the
+tables it binds fits AQE's own advisory partition size
+(``spark.sql.adaptive.advisoryPartitionSizeInBytes``), ``sql()`` and
+``Prepared.run()`` plan it eagerly, under AQE off and one shuffle
+partition: a dashboard query over small tables has nothing for AQE to
+adapt, and AQE would still run every shuffle stage as a job of its own
+and re-plan between them (a warm pass of 20 dashboard SELECTs ran 48
+jobs that way, 28 this way — one per query plus one per broadcast).
+Collecting the returned frame runs that plan; a frame derived from it
+plans afresh under the session's confs.  Larger inputs, and inputs
+without statistics (an http table), plan lazily under the session's
+confs, as before.  This is the rule ``iterative.loop_scope`` applies to
+driver loops; both scopes go through
+:func:`exosql_spark.session.scoped_conf`, which sets the shared session
+conf, so run one query per session at a time.  Only the tables the
+context binds are sized: session views or table functions a query also
+reads do not count.
+
 The reference *context* is a map ``%{"db" => {ExtractorModule, opts}}``
 (``lib/exosql/parser.ex :: real_parse/2`` resolves ``db.table`` against
 extractor ``schema/1,2`` callbacks — lazily, at parse time). Here a
@@ -60,6 +78,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from exosql_spark.dialect import rewrite
+from exosql_spark.session import scoped_conf
 from exosql_spark.sources import resolve_source
 
 
@@ -70,6 +89,48 @@ from exosql_spark.sources import resolve_source
 # left alone (no ``createOrReplaceTempView`` round trip) when it holds
 # the same one.
 _VIEWS_ATTR = "_exosql_bound_views"
+
+
+#: How a query over small inputs is planned: one shuffle partition and
+#: no AQE.  A query whose inputs fit one partition has nothing for AQE
+#: to coalesce or split, and AQE would still run each shuffle stage as a
+#: job of its own and re-plan between them.
+_SMALL_INPUT_CONFS = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "1",
+}
+
+
+#: Attribute naming the confs a frame's plan was made under, set on the
+#: frames :meth:`Context._run` plans eagerly.
+_PLANNED_ATTR = "_exosql_planned_confs"
+
+
+def planned_confs(df: DataFrame) -> dict[str, str]:
+    """The confs ``df``'s physical plan was made under when a
+    :class:`Context` planned it eagerly (a query over small inputs),
+    else ``{}``.  Collecting ``df`` runs that plan; anything that wraps
+    ``df`` in a new plan (a write, a ``count()``) plans afresh under the
+    session's confs, so re-plan it inside
+    :func:`exosql_spark.session.scoped_conf` over these confs to run the
+    plan a collect runs."""
+    return vars(df).get(_PLANNED_ATTR, {})
+
+
+def _fits_one_partition(spark: SparkSession, views: dict[str, DataFrame]) -> bool:
+    """Whether the estimated size of ``views`` together fits AQE's own
+    advisory partition size.  Sizes come from each frame's optimized
+    plan statistics; a source without them (an http table) reports
+    ``spark.sql.defaultSizeInBytes``, which counts as large."""
+    limit = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    total = 0
+    for df in views.values():
+        total += df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        if total > limit:
+            return False
+    return True
 
 
 def _bind_views(spark: SparkSession, views: dict[str, DataFrame]) -> None:
@@ -157,18 +218,33 @@ class Context:
         _bind_views(self.spark, views)
         return rewritten, views
 
-    def _run(self, rewritten: str, vars: dict[str, Any] | None, coerce: bool) -> DataFrame:
-        if not coerce:
-            return self.spark.sql(rewritten, args=vars) if vars else self.spark.sql(rewritten)
-        prev = self.spark.conf.get("spark.sql.ansi.enabled", "true")
-        self.spark.conf.set("spark.sql.ansi.enabled", "false")
-        try:
-            # spark.sql parses+analyzes eagerly: coercion casts are baked
-            # into the returned plan, so restoring the conf right after is
-            # safe even though execution happens later.
-            return self.spark.sql(rewritten, args=vars) if vars else self.spark.sql(rewritten)
-        finally:
-            self.spark.conf.set("spark.sql.ansi.enabled", prev)
+    def _run(
+        self,
+        rewritten: str,
+        vars: dict[str, Any] | None,
+        coerce: bool,
+        views: dict[str, DataFrame],
+    ) -> DataFrame:
+        """Parse and analyze ``rewritten`` over its bound ``views``,
+        sized from those inputs.  When they fit one partition (see
+        :func:`_fits_one_partition`) the query is also physically
+        planned here, under AQE off and one shuffle partition: confs
+        are read at planning time, so the plan is forced inside the
+        scope, and collecting the returned frame runs that plan.
+        Otherwise planning stays lazy and follows the session's confs.
+        ``coerce`` scopes ``spark.sql.ansi.enabled=false`` to the same
+        call; analysis bakes the coercion casts into the plan, so
+        execution later needs no conf."""
+        small = _fits_one_partition(self.spark, views)
+        confs = dict(_SMALL_INPUT_CONFS) if small else {}
+        if coerce:
+            confs["spark.sql.ansi.enabled"] = "false"
+        with scoped_conf(self.spark, confs):
+            df = self.spark.sql(rewritten, args=vars) if vars else self.spark.sql(rewritten)
+            if small:
+                df._jdf.queryExecution().executedPlan()
+                setattr(df, _PLANNED_ATTR, _SMALL_INPUT_CONFS)
+        return df
 
     def sql(
         self,
@@ -176,15 +252,16 @@ class Context:
         vars: dict[str, Any] | None = None,
         coerce: bool | None = None,
     ) -> DataFrame:
-        rewritten, _ = self._rewrite(sql)
-        return self._run(rewritten, vars, self._coerce if coerce is None else coerce)
+        rewritten, views = self._rewrite(sql)
+        return self._run(rewritten, vars, self._coerce if coerce is None else coerce, views)
 
     def prepare(self, sql: str, coerce: bool | None = None) -> "Prepared":
         """``ExoSQL.parse/2`` parity: rewrite once, return a reusable
         handle that re-executes with different ``vars`` bindings. The
         dialect rewrite and source resolution run exactly once; each
         run still has ``spark.sql`` parse and analyze the rewritten
-        text (Spark keeps no plan cache for SQL text)."""
+        text (Spark keeps no plan cache for SQL text), and plans it
+        when its inputs are small (see :meth:`_run`)."""
         rewritten, views = self._rewrite(sql)
         return Prepared(
             self, rewritten, self._coerce if coerce is None else coerce, views
@@ -214,7 +291,7 @@ class Prepared:
 
     def run(self, vars: dict[str, Any] | None = None) -> DataFrame:
         _bind_views(self.context.spark, self.views)
-        return self.context._run(self.rewritten, vars, self.coerce)
+        return self.context._run(self.rewritten, vars, self.coerce, self.views)
 
     __call__ = run
 
@@ -227,10 +304,11 @@ def query(
     coerce: bool | None = None,
 ) -> DataFrame:
     """``ExoSQL.query(sql, context)`` equivalent; returns a DataFrame
-    (lazy — the reference returned fully-materialized rows; callers
-    ``.collect()`` at the edge if they need that).  Run one query per
-    session at a time: iterative operators' loop scopes change the
-    shared session conf while they run (see ``iterative.loop_conf``)."""
+    (not yet executed — the reference returned fully-materialized rows;
+    callers ``.collect()`` at the edge if they need that).  Run one
+    query per session at a time: Context queries over small inputs and
+    iterative operators' loop scopes change the shared session conf
+    while they plan (see :func:`exosql_spark.session.scoped_conf`)."""
     ctx = context if isinstance(context, Context) else Context(spark, context or {})
     return ctx.sql(sql, vars, coerce=coerce)
 

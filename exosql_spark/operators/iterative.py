@@ -24,7 +24,10 @@ iterates over:
    derived from input size, never a constant tuned for local mode or
    the cluster), clamped to the session ceiling;
 2. AQE-off + that count for the scope's duration (:func:`loop_conf`,
-   which always restores the caller's confs);
+   built on :func:`exosql_spark.session.scoped_conf` — the one
+   save/set/restore of session confs, which ``Context`` also uses to
+   plan queries over small inputs the same way — so the caller's
+   confs are always restored);
 3. a one-time re-layout of each keyed persisted frame onto that count
    when it is far below the ceiling;
 4. the release of those frames on exit, exception path included.
@@ -38,6 +41,8 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
+from exosql_spark.session import scoped_conf
+
 #: Target rows per shuffle partition inside iteration loops.  The
 #: frames those loops exchange are narrow (a few 8-byte columns) and
 #: the per-row work is a hash-join probe + sum — compute-light, so
@@ -49,21 +54,18 @@ LOOP_ROWS_PER_TASK = 1_000_000
 
 @contextmanager
 def loop_conf(spark, partitions: int):
-    """AQE-off + pinned shuffle partitions for the scope's duration;
-    always restores the caller's confs (exception path included).
-    The overrides go on the shared session conf, so run one query per
-    session at a time: a query planned concurrently on the same session
-    inherits them."""
-    conf = spark.conf
-    saved_aqe = conf.get("spark.sql.adaptive.enabled")
-    saved_p = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
+    """AQE-off + pinned shuffle partitions for the scope's duration,
+    through :func:`exosql_spark.session.scoped_conf` (which always
+    restores the caller's confs, exception path included, and whose
+    one-query-per-session rule applies here)."""
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(partitions),
+        },
+    ):
         yield
-    finally:
-        conf.set("spark.sql.adaptive.enabled", saved_aqe)
-        conf.set("spark.sql.shuffle.partitions", saved_p)
 
 
 @contextmanager

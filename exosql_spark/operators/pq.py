@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from exosql_spark.operators.clustering import _check_k, _lloyd, _sq_dist
+from exosql_spark.operators.clustering import _check_k, _lloyd, _sq_dist, _sq_dists
 
 
 def collect_vectors(
@@ -46,10 +46,15 @@ def collect_vectors(
     id — r19 collect consolidation: the PQ query entries used to pay a
     separate scan job per driver-side consumer (codebook training
     sample, query vectors, rerank query frame) even when the consumers
-    read overlapping row sets; collect once, slice driver-side."""
+    read overlapping row sets; collect once, slice driver-side. NULL
+    vectors are skipped: they have no distance to train on or query
+    with."""
     return [
         (r[0], list(r[1]))
-        for r in df.select(id_col, vec_col).orderBy(id_col).collect()
+        for r in df.where(F.col(vec_col).isNotNull())
+        .select(id_col, vec_col)
+        .orderBy(id_col)
+        .collect()
     ]
 
 
@@ -85,9 +90,7 @@ def train_codebooks(
     _check_k(k, iters)
     sub_dim = dim // m
     if not isinstance(sample, list):
-        sample = collect_vectors(
-            sample.where(F.col(vec_col).isNotNull()), id_col, vec_col
-        )
+        sample = collect_vectors(sample, id_col, vec_col)
     vecs = [v for _, v in sample if v is not None]
     x = np.array(vecs, dtype=np.float64).reshape(len(vecs), dim)
     return [
@@ -129,9 +132,7 @@ def pq_encode(
             def encode(x):
                 codes = np.empty((len(x), m), dtype=np.int32)
                 for j in range(m):
-                    sub = x[:, j * sd : (j + 1) * sd]
-                    d = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(-1)
-                    codes[:, j] = d.argmin(1)
+                    codes[:, j] = _sq_dists(x[:, j * sd : (j + 1) * sd], books[j]).argmin(1)
                 return codes
 
             mask = v.notna().to_numpy()

@@ -324,6 +324,17 @@ class TestProductQuantization:
         }
         assert codes3 == codes1
 
+    def test_collect_vectors_skips_null_vectors(self, spark):
+        """A NULL vector has no distance to train on or query with; the
+        PQ catalog entries collect their sample and query vectors
+        through ``collect_vectors`` directly."""
+        from exosql_spark.operators import pq
+
+        df = spark.createDataFrame(
+            [(1, None), (0, [0.5, 1.5])], "vec_id long, embedding array<float>"
+        )
+        assert pq.collect_vectors(df) == [(0, [0.5, 1.5])]
+
     def test_adc_recall_on_planted(self, corpus):
         """An ε-copy of the query must rank in the ADC top-k: its code
         equals the query's nearest codewords, so its approximate

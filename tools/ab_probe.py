@@ -6,7 +6,9 @@
 
 bench.py is loaded by path from this file's own checkout, while
 ``exosql_spark`` comes from PYTHONPATH — so an older commit's catalog
-is timed with today's harness.  Process-level interleaving is the only
+is timed with today's harness, in the session that commit's
+``get_spark`` builds (commits whose factory does not size the codegen
+cache recompile evicted classes between passes).  Process-level interleaving is the only
 honest A/B on a VM with CPU-steal drift: two code versions can't share
 a SparkSession, so run the two sides ALTERNATELY several times and
 take the min over iterations per side.
@@ -36,7 +38,7 @@ def _bench():
 
 def main(names):
     bench = _bench()
-    spark = get_spark(app_name="ab_probe", extra_conf=bench.SESSION_CONF)
+    spark = get_spark(app_name="ab_probe")
     qs = all_queries()
     entries = {name: qs[name] for name in names}
     bench.warm_pass(spark, entries, bench.SF_DIR)
