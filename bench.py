@@ -79,8 +79,15 @@ import time
 
 from exosql_spark.cache import release_caches
 from exosql_spark.catalog import all_queries
-from exosql_spark.context import planned_confs
-from exosql_spark.session import get_spark, scoped_conf
+from exosql_spark.session import get_spark
+
+try:
+    from exosql_spark.context import as_planned
+except ImportError:
+    # trees before per-query sizing (tools/ab_probe.py times older
+    # commits with this harness) plan every frame under the session's
+    # confs, so there is nothing to re-apply
+    from contextlib import nullcontext as as_planned
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Overridable so auxiliary sweeps (the tools/gen_scaled.py 10× scale
@@ -121,9 +128,9 @@ def time_run(spark, fn, sf_dir):
     try:
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
-        # the sink wraps df in a new plan: make it under the confs df's
-        # own plan was made under, so the run times what a collect runs
-        with scoped_conf(spark, planned_confs(df)):
+        # the sink wraps df in a new plan: make it the way df's own
+        # plan was made, so the run times what a collect runs
+        with as_planned(df):
             df.write.format("noop").mode("overwrite").save()
         sec = time.perf_counter() - t0
     finally:

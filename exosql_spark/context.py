@@ -9,23 +9,28 @@ Reference surface (``lib/exosql.ex``):
     source resolution run once; ``spark.sql`` still parses and analyzes
     on every run) or :meth:`Context.sql` with ``vars``.
 
-Each query is sized from its inputs.  When the estimated size of the
-tables it binds fits AQE's own advisory partition size
-(``spark.sql.adaptive.advisoryPartitionSizeInBytes``), ``sql()`` and
-``Prepared.run()`` plan it eagerly, under AQE off and one shuffle
-partition: a dashboard query over small tables has nothing for AQE to
-adapt, and AQE would still run every shuffle stage as a job of its own
-and re-plan between them (a warm pass of 20 dashboard SELECTs ran 48
+Each query is sized from its inputs.  ``sql()`` and ``Prepared.run()``
+parse and analyze it, then add up the estimated size of the leaves of
+its optimized plan (subqueries included): every table it reads, bound
+by this context or not.  When that fits AQE's smallest partitions
+(``spark.sql.adaptive.coalescePartitions.minPartitionSize`` per core;
+see :func:`_fits_one_partition`), the query is physically planned
+there and then, under AQE off and one shuffle partition: a dashboard
+query over small tables has nothing for AQE to adapt, and AQE would
+still run every shuffle stage as a job of its own and re-plan between
+them (a warm pass of 20 dashboard SELECTs ran 48
 jobs that way, 28 this way — one per query plus one per broadcast).
-Collecting the returned frame runs that plan; a frame derived from it
-plans afresh under the session's confs.  Larger inputs, and inputs
-without statistics (an http table), plan lazily under the session's
-confs, as before.  This is the rule ``iterative.loop_scope`` applies to
-driver loops; both scopes go through
-:func:`exosql_spark.session.scoped_conf`, which sets the shared session
-conf, so run one query per session at a time.  Only the tables the
-context binds are sized: session views or table functions a query also
-reads do not count.
+The estimate is Spark's own — the one its broadcast-join threshold is
+compared against — so a file table counts at its size on disk.
+Collecting the returned frame runs that plan; :func:`to_result` with a
+``limit`` and :func:`format_result` make their new plan over it the same
+way (:func:`as_planned`), while any other frame derived from it plans
+afresh under the session's confs.  Larger inputs, and inputs without
+statistics (an http table), plan lazily under the session's confs, as
+before.  This is the rule ``iterative.loop_scope`` applies to driver
+loops; both scopes go through :func:`exosql_spark.session.scoped_conf`,
+which sets the shared session conf while it plans, so run one query per
+session at a time.
 
 The reference *context* is a map ``%{"db" => {ExtractorModule, opts}}``
 (``lib/exosql/parser.ex :: real_parse/2`` resolves ``db.table`` against
@@ -106,30 +111,43 @@ _SMALL_INPUT_CONFS = {
 _PLANNED_ATTR = "_exosql_planned_confs"
 
 
-def planned_confs(df: DataFrame) -> dict[str, str]:
-    """The confs ``df``'s physical plan was made under when a
-    :class:`Context` planned it eagerly (a query over small inputs),
-    else ``{}``.  Collecting ``df`` runs that plan; anything that wraps
-    ``df`` in a new plan (a write, a ``count()``) plans afresh under the
-    session's confs, so re-plan it inside
-    :func:`exosql_spark.session.scoped_conf` over these confs to run the
-    plan a collect runs."""
-    return vars(df).get(_PLANNED_ATTR, {})
+def as_planned(df: DataFrame):
+    """A conf scope in which a new plan over ``df`` (a limit, a write)
+    is made the way ``df``'s own was.  A :class:`Context` query over
+    small inputs was planned under :data:`_SMALL_INPUT_CONFS`, and a
+    plan that wraps it is made afresh when its action runs, so run that
+    action inside this scope; for any other frame the scope sets
+    nothing."""
+    return scoped_conf(df.sparkSession, vars(df).get(_PLANNED_ATTR, {}))
 
 
-def _fits_one_partition(spark: SparkSession, views: dict[str, DataFrame]) -> bool:
-    """Whether the estimated size of ``views`` together fits AQE's own
-    advisory partition size.  Sizes come from each frame's optimized
-    plan statistics; a source without them (an http table) reports
-    ``spark.sql.defaultSizeInBytes``, which counts as large."""
-    limit = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+def _fits_one_partition(df: DataFrame) -> bool:
+    """Whether the inputs of ``df``'s optimized plan — the leaves of the
+    plan and of its subqueries — together fit AQE's smallest partitions:
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` times the
+    default parallelism.  AQE's coalescing (parallelism first, Spark's
+    default) would cut a shuffle that size into partitions of at most
+    its minimum size, tasks whose fixed cost outweighs their work.  A
+    larger input keeps AQE: at 25 MB of parquet a window ran 1.4–1.9×
+    slower in one task than spread over 4 cores.  A source without
+    statistics (an http table) reports ``spark.sql.defaultSizeInBytes``,
+    which counts as large."""
+    spark = df.sparkSession
+    limit = spark.sparkContext.defaultParallelism * (
+        spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+        )
     )
+    plan = df._jdf.queryExecution().optimizedPlan()
+    subqueries = plan.subqueriesAll()
+    plans = [plan] + [subqueries.apply(i) for i in range(subqueries.size())]
     total = 0
-    for df in views.values():
-        total += df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        if total > limit:
-            return False
+    for p in plans:
+        leaves = p.collectLeaves()
+        for i in range(leaves.size()):
+            total += leaves.apply(i).stats().sizeInBytes()
+            if total > limit:
+                return False
     return True
 
 
@@ -218,31 +236,24 @@ class Context:
         _bind_views(self.spark, views)
         return rewritten, views
 
-    def _run(
-        self,
-        rewritten: str,
-        vars: dict[str, Any] | None,
-        coerce: bool,
-        views: dict[str, DataFrame],
-    ) -> DataFrame:
-        """Parse and analyze ``rewritten`` over its bound ``views``,
-        sized from those inputs.  When they fit one partition (see
-        :func:`_fits_one_partition`) the query is also physically
-        planned here, under AQE off and one shuffle partition: confs
-        are read at planning time, so the plan is forced inside the
-        scope, and collecting the returned frame runs that plan.
-        Otherwise planning stays lazy and follows the session's confs.
-        ``coerce`` scopes ``spark.sql.ansi.enabled=false`` to the same
-        call; analysis bakes the coercion casts into the plan, so
-        execution later needs no conf."""
-        small = _fits_one_partition(self.spark, views)
-        confs = dict(_SMALL_INPUT_CONFS) if small else {}
-        if coerce:
-            confs["spark.sql.ansi.enabled"] = "false"
-        with scoped_conf(self.spark, confs):
+    def _run(self, rewritten: str, vars: dict[str, Any] | None, coerce: bool) -> DataFrame:
+        """Parse and analyze ``rewritten``, then size it from its own
+        optimized plan (see :func:`_fits_one_partition`).  When its
+        inputs fit one partition the query is also physically planned
+        here, under AQE off and one shuffle partition: physical planning
+        reads both confs, so the plan is forced inside the scope, and
+        collecting the returned frame runs that plan (a ``DISTRIBUTE
+        BY`` without a count keeps the session's partition count, which
+        the parser fixes).  Otherwise planning stays lazy and follows
+        the session's confs.  ``coerce`` scopes ``spark.sql.ansi.enabled=false``
+        around all of it; analysis bakes the coercion casts into the
+        plan, so execution later needs no conf."""
+        ansi = {"spark.sql.ansi.enabled": "false"} if coerce else {}
+        with scoped_conf(self.spark, ansi):
             df = self.spark.sql(rewritten, args=vars) if vars else self.spark.sql(rewritten)
-            if small:
-                df._jdf.queryExecution().executedPlan()
+            if _fits_one_partition(df):
+                with scoped_conf(self.spark, _SMALL_INPUT_CONFS):
+                    df._jdf.queryExecution().executedPlan()
                 setattr(df, _PLANNED_ATTR, _SMALL_INPUT_CONFS)
         return df
 
@@ -252,8 +263,8 @@ class Context:
         vars: dict[str, Any] | None = None,
         coerce: bool | None = None,
     ) -> DataFrame:
-        rewritten, views = self._rewrite(sql)
-        return self._run(rewritten, vars, self._coerce if coerce is None else coerce, views)
+        rewritten, _ = self._rewrite(sql)
+        return self._run(rewritten, vars, self._coerce if coerce is None else coerce)
 
     def prepare(self, sql: str, coerce: bool | None = None) -> "Prepared":
         """``ExoSQL.parse/2`` parity: rewrite once, return a reusable
@@ -291,7 +302,7 @@ class Prepared:
 
     def run(self, vars: dict[str, Any] | None = None) -> DataFrame:
         _bind_views(self.context.spark, self.views)
-        return self.context._run(self.rewritten, vars, self.coerce, self.views)
+        return self.context._run(self.rewritten, vars, self.coerce)
 
     __call__ = run
 
@@ -327,8 +338,10 @@ def explain(
 
 def format_result(df: DataFrame, n: int = 100) -> str:
     """``ExoSQL.format_result/1`` equivalent — ASCII table of the first n
-    rows (driver-side; for interactive/dashboard use only)."""
-    return df._show_string(n, 0, False)
+    rows (driver-side; for interactive/dashboard use only).  The table
+    is a new plan over ``df``, made and run inside :func:`as_planned`."""
+    with as_planned(df):
+        return df._show_string(n, 0, False)
 
 
 @dataclass
@@ -347,7 +360,12 @@ class Result:
 
 def to_result(df: DataFrame, limit: int | None = None) -> Result:
     """Materialize a DataFrame into the reference's Result shape.
-    ``limit`` guards accidental full-table driver collects."""
-    if limit is not None:
-        df = df.limit(limit)
-    return Result(columns=list(df.columns), rows=[list(r) for r in df.collect()])
+    ``limit`` guards accidental full-table driver collects; the limited
+    frame is a new plan over ``df``, made and run inside
+    :func:`as_planned`."""
+    if limit is None:
+        rows = df.collect()
+    else:
+        with as_planned(df):
+            rows = df.limit(limit).collect()
+    return Result(columns=list(df.columns), rows=[list(r) for r in rows])

@@ -20,12 +20,15 @@ configs are what we would set cluster-side for the 100 TB target:
 
 :func:`scoped_conf` is the one save/set/restore of session confs: the
 iterative loops' AQE-off scope and ``Context``'s per-query sizing and
-coercion scopes all go through it.
+coercion scopes all go through it.  Scopes on one session hold that
+session's lock, so a scope never saves another scope's values and the
+caller's confs always come back.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -69,22 +72,45 @@ def get_spark(
     return spark
 
 
+# Each session's conf-scope lock, stored as an attribute on the
+# SparkSession object (the context.py view-registry pattern); created
+# under one module lock so two threads never make two.
+_CONF_LOCK_ATTR = "_exosql_conf_lock"
+_CONF_LOCK_GUARD = threading.Lock()
+
+
+def _conf_lock(spark: SparkSession) -> threading.RLock:
+    with _CONF_LOCK_GUARD:
+        lock = getattr(spark, _CONF_LOCK_ATTR, None)
+        if lock is None:
+            lock = threading.RLock()
+            setattr(spark, _CONF_LOCK_ATTR, lock)
+        return lock
+
+
 @contextmanager
 def scoped_conf(spark: SparkSession, confs: dict[str, str]):
     """Set ``confs`` on the session conf for the scope's duration and
     restore the caller's values on every exit path, the exception path
-    included.  The session conf is shared, so run one query per session
-    at a time: a query planned concurrently on the same session inherits
-    the scope's values."""
-    conf = spark.conf
-    saved = {k: conf.get(k) for k in confs}
-    try:
-        for k, v in confs.items():
-            conf.set(k, v)
+    included.  The scope holds the session's lock (re-entrant, so scopes
+    nest on one thread): a scope opened on another thread waits, instead
+    of saving this scope's values and restoring them after it ends.  The
+    session conf is still shared, so a query planned on another thread
+    outside any scope sees the scope's values while it lasts — run one
+    query per session at a time.  An empty ``confs`` takes no lock."""
+    if not confs:
         yield
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
+        return
+    with _conf_lock(spark):
+        conf = spark.conf
+        saved = {k: conf.get(k) for k in confs}
+        try:
+            for k, v in confs.items():
+                conf.set(k, v)
+            yield
+        finally:
+            for k, v in saved.items():
+                conf.set(k, v)
 
 
 def ensure_session_confs(spark: SparkSession) -> None:

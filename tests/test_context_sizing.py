@@ -1,28 +1,32 @@
 """Per-query sizing of Context queries and the session's codegen cache.
 
-A Context query whose bound inputs fit AQE's advisory partition size is
+A Context query whose inputs fit AQE's smallest partitions is
 planned when it is made, under AQE off and one shuffle partition; any
 other query plans lazily under the session's confs.  Covered here: the
-plan each path makes, old-vs-new row equivalence over the dashboard
-templates, the job budget of a small GROUP BY, the conf scope's restore
-on every path, and that the session keeps its generated code."""
+plan each path makes, inputs the context does not bind, old-vs-new row
+equivalence over the dashboard templates, the job budget of a small
+GROUP BY (shown and limited too), the conf scope's restore on every path
+and across threads, and that the session keeps its generated code."""
 
 from __future__ import annotations
 
 import json
 import os
 import random
+import threading
 import uuid
+from contextlib import contextmanager
 
 import pytest
 
-from exosql_spark.context import Context, planned_confs, query, to_result
+from exosql_spark.context import Context, format_result, query, to_result
+from exosql_spark.operators.iterative import loop_conf
 from exosql_spark.session import scoped_conf
 
 AQE = "spark.sql.adaptive.enabled"
 PARTITIONS = "spark.sql.shuffle.partitions"
 ANSI = "spark.sql.ansi.enabled"
-ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+MIN_PARTITION = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
 GROUP_BY = (
     "SELECT n_regionkey, count(*) AS n FROM tpch.nation "
@@ -43,6 +47,16 @@ def _plan_nodes(df) -> list:
         ch = p.children()
         stack.extend(ch.apply(i) for i in range(ch.size()))
     return out
+
+
+def _adaptive(df) -> bool:
+    """Whether ``df`` plans under AQE (forces planning)."""
+    return _plan_nodes(df)[0].getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+
+
+def _shuffles(df) -> list:
+    """The shuffle exchanges of ``df``'s executed plan outside AQE."""
+    return [p for p in _plan_nodes(df) if p.getClass().getSimpleName() == "ShuffleExchangeExec"]
 
 
 def _jobs_in(spark, group: str, fn):
@@ -81,26 +95,23 @@ def test_small_inputs_plan_one_partition_without_aqe(spark, small_sources, kind)
         ctx.prepare(GROUP_BY).run({"lo": 0}),
         query(spark, GROUP_BY, spec, {"lo": 0}),
     ):
-        assert planned_confs(df) == {AQE: "false", PARTITIONS: "1"}
-        nodes = [(p.getClass().getSimpleName(), p) for p in _plan_nodes(df)]
-        assert "AdaptiveSparkPlanExec" not in {name for name, _ in nodes}
-        shuffles = [p for name, p in nodes if name == "ShuffleExchangeExec"]
+        assert not _adaptive(df)
+        shuffles = _shuffles(df)
         assert shuffles and all(p.numPartitions() == 1 for p in shuffles)
         assert len(df.collect()) == 5
 
 
-def test_inputs_over_the_advisory_size_keep_aqe(spark, small_sources):
+def test_inputs_over_the_cut_keep_aqe(spark, small_sources):
     spec = small_sources["parquet"]
     ctx = Context(spark, spec)
-    with scoped_conf(spark, {ADVISORY: "1b"}):
+    with scoped_conf(spark, {MIN_PARTITION: "1b"}):
         dfs = [
             ctx.sql(GROUP_BY, {"lo": 0}),
             ctx.prepare(GROUP_BY).run({"lo": 0}),
             query(spark, GROUP_BY, spec, {"lo": 0}),
         ]
     for df in dfs:
-        assert planned_confs(df) == {}
-        assert _plan_nodes(df)[0].getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+        assert _adaptive(df)
         assert len(df.collect()) == 5
 
 
@@ -108,9 +119,32 @@ def test_unknown_input_size_counts_as_large(spark):
     """An http table reports Spark's default size (no statistics)."""
     ctx = Context(spark, {"web": {"http": {"pages": 2}}})
     df = ctx.sql("SELECT page, count(*) AS n FROM web.api GROUP BY page")
-    assert planned_confs(df) == {}
-    assert _plan_nodes(df)[0].getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+    assert _adaptive(df)
     assert sorted(r.n for r in df.collect()) == [10, 10]
+
+
+#: Queries over a small bound table plus an input the context does not
+#: bind: a session view, a table function, a scalar subquery.  ``range``
+#: is sized from its row count (8 bytes a row) without running.
+UNBOUND_LARGE = {
+    "session_view": "SELECT count(*) AS n FROM tpch.nation JOIN big ON n_nationkey = id",
+    "table_function": (
+        "SELECT count(*) AS n FROM tpch.nation JOIN range(100000000) ON n_nationkey = id"
+    ),
+    "scalar_subquery": (
+        "SELECT n_name, (SELECT max(id) FROM range(100000000)) AS m FROM tpch.nation"
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(UNBOUND_LARGE))
+def test_inputs_the_context_does_not_bind_are_sized(spark, small_sources, name):
+    """Every input of the query counts, not just the tables the context
+    binds: one large unbound input keeps the query on AQE."""
+    spark.range(100_000_000).createOrReplaceTempView("big")
+    ctx = Context(spark, small_sources["parquet"])
+    assert not _adaptive(ctx.sql("SELECT count(*) AS n FROM tpch.nation"))
+    assert _adaptive(ctx.sql(UNBOUND_LARGE[name]))
 
 
 # -- old-vs-new equivalence -------------------------------------------------
@@ -205,14 +239,17 @@ def dashboard_spec(sf_dir, tmp_path_factory):
 
 def test_dashboard_rows_equal_on_both_paths(spark, dashboard_spec):
     """Each template returns the same rows planned at one partition
-    without AQE as planned lazily under AQE (advisory size 1 byte)."""
+    without AQE as planned lazily under AQE (minimum partition size 1
+    byte)."""
     ctx = Context(spark, dashboard_spec)
     nonempty = 0
     for sql, vars, coerce in DASHBOARD:
         small = ctx.sql(sql, vars, coerce=coerce)
-        with scoped_conf(spark, {ADVISORY: "1b"}):
+        with scoped_conf(spark, {MIN_PARTITION: "1b"}):
             large = ctx.sql(sql, vars, coerce=coerce)
-        assert planned_confs(small) and not planned_confs(large), sql
+        assert not _adaptive(small), sql
+        # AQE wraps only plans with an exchange (a top-k has none)
+        assert _adaptive(large) or not _shuffles(large), sql
         got = _rows(small)
         assert got == _rows(large), sql
         nonempty += bool(got)
@@ -237,6 +274,17 @@ def test_small_group_by_runs_one_job(spark, small_sources):
         res, jobs = _jobs_in(spark, f"budget-{name}", lambda: to_result(run()))
         assert len(res) == 5
         assert len(jobs) == 1, (name, jobs)
+    # a limit or an ASCII table is a new plan over the frame, made the
+    # way the frame's own plan was
+    df = ctx.sql(GROUP_BY, {"lo": 0})
+    for name, show in {
+        "limit": lambda: len(to_result(df, limit=3)),
+        "format": lambda: format_result(df).count("\n"),
+    }.items():
+        show()
+        n, jobs = _jobs_in(spark, f"budget-{name}", show)
+        assert n > 0
+        assert len(jobs) == 1, (name, jobs)
 
 
 # -- the conf scope ---------------------------------------------------------
@@ -252,8 +300,9 @@ def test_conf_scope_restores_on_every_path(spark, small_sources, monkeypatch):
         return real_sql(*a, **kw)
 
     monkeypatch.setattr(spark, "sql", spy)
-    ctx.sql("SELECT count(*) AS n FROM tpch.nation").collect()
-    assert seen == {AQE: "false", PARTITIONS: "1", ANSI: "false"}
+    df = ctx.sql("SELECT count(*) AS n FROM tpch.nation")
+    assert seen == {**before, ANSI: "false"}  # parsed under coerce only
+    assert not _adaptive(df)  # planned under the sizing confs
     assert _conf(spark) == before
 
     def boom(*a, **kw):
@@ -275,6 +324,53 @@ def test_conf_scope_restores_on_every_path(spark, small_sources, monkeypatch):
         with scoped_conf(spark, {AQE: "false", PARTITIONS: "3", ANSI: "false"}):
             assert _conf(spark) == {AQE: "false", PARTITIONS: "3", ANSI: "false"}
             raise RuntimeError("boom")
+    assert _conf(spark) == before
+
+
+def test_conf_scope_across_threads(spark, small_sources, monkeypatch):
+    """A Context query planned on one thread while a loop scope is open
+    on another, with the query's scope held open until the loop's ends
+    if it can be: the query's scope must wait for the loop's instead of
+    saving the loop's values and restoring them after the loop is gone.
+    Both threads finish with the session's own confs, and the query is
+    still planned at one partition."""
+    from exosql_spark import context as context_mod
+
+    ctx = Context(spark, small_sources["parquet"])
+    before = _conf(spark)
+    loop_in, query_in, loop_out = threading.Event(), threading.Event(), threading.Event()
+    real_scope, out = context_mod.scoped_conf, {}
+
+    @contextmanager
+    def held_scope(spark_, confs):
+        with real_scope(spark_, confs):
+            if confs:
+                query_in.set()
+                loop_out.wait(timeout=2)
+            yield
+
+    monkeypatch.setattr(context_mod, "scoped_conf", held_scope)
+
+    def loop():
+        with loop_conf(spark, 3):
+            out["loop_conf"] = _conf(spark)
+            loop_in.set()
+            query_in.wait(timeout=2)
+        loop_out.set()
+
+    def run_query():
+        loop_in.wait()
+        df = ctx.sql(GROUP_BY, {"lo": 0})
+        out["adaptive"] = _adaptive(df)
+        out["rows"] = len(df.collect())
+
+    threads = [threading.Thread(target=loop), threading.Thread(target=run_query)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert out["loop_conf"] == {**before, AQE: "false", PARTITIONS: "3"}
+    assert out["rows"] == 5 and not out["adaptive"]
     assert _conf(spark) == before
 
 
